@@ -49,7 +49,18 @@ object Scale8v32Proof {
     val vecsPath = s"$dir/vecs.parquet"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(docsPath))) {
+    // each input is written under a temporary name and renamed when
+    // complete, and checked on its own: a run that died between the two
+    // writes leaves no partial or missing file for later runs to reuse
+    def writeOnce(path: String)(df: => DataFrame): Unit = {
+      val dst = new org.apache.hadoop.fs.Path(path)
+      if (!fs.exists(dst)) {
+        val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp")
+        df.write.mode("overwrite").parquet(tmp.toString)
+        require(fs.rename(tmp, dst), s"could not move $tmp to $dst")
+      }
+    }
+    writeOnce(docsPath) {
       val base = Datagen.syntheticDocs(spark, n)
       val nPlant = n / 100
       val exactDups = base.filter(col("doc_id") % 100 === 0)
@@ -60,10 +71,8 @@ object Scale8v32Proof {
       base.select("doc_id", "text").unionAll(exactDups).unionAll(nearDups)
         .withColumn("source", concat(lit("src"), (col("doc_id") % 20).cast("string")))
         .repartition(64)
-        .write.mode("overwrite").parquet(docsPath)
-      Datagen.gaussianVectors(spark, 200000, 64)
-        .repartition(32).write.mode("overwrite").parquet(vecsPath)
     }
+    writeOnce(vecsPath)(Datagen.gaussianVectors(spark, 200000, 64).repartition(32))
     def docs = spark.read.parquet(docsPath)
     def vecs = spark.read.parquet(vecsPath)
 

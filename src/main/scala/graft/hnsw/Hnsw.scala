@@ -154,15 +154,13 @@ case class CalCurve(k: Int, points: Seq[(Int, Double)], queries: Long = 100L) {
 case class HnswIndex(nodes: DataFrame, edges: DataFrame, meta: IndexMeta,
                      centroids: Option[DataFrame] = None,
                      pq: Option[PqSidecar] = None,
-                     calibration: Seq[CalCurve] = Nil)
-
-/** Tagged-union row shipping nodes (kind 0), edges (kind 1) and replicated
-  * queries (kind 2) to each shard in ONE shuffle — the carrier of
-  * [[Hnsw.annQueryLarge]]'s driver-free query path. Sorted arrival by
-  * (kind, id) lets one pass build the sub-graph and then stream queries.
-  */
-case class AnnUnionRow(pid: Int, kind: Int, id: Long, vector: Array[Float],
-                       level: Int, tombstone: Boolean, layer: Int, dst: Long)
+                     calibration: Seq[CalCurve] = Nil) {
+  /** The shard graphs this value searches, loaded on the executors by
+    * the first graph-search query over them and kept while a value that
+    * searches them is reachable ([[ResidentShards.of]]).
+    */
+  @transient private[graft] lazy val resident: ResidentView = ResidentShards.of(this)
+}
 
 /** Distributed HNSW: partition-parallel batch build, persistence, batch ANN
   * query, tombstone delete and rebuild (SURVEY.md §7.4).
@@ -178,6 +176,11 @@ case class AnnUnionRow(pid: Int, kind: Int, id: Long, vector: Array[Float],
   * size.
   */
 object Hnsw {
+
+  /** Name of the resident shard-graph search in query plans (it appears
+    * as `Scan HnswShardSearch`).
+    */
+  private[graft] val ShardSearchName = "HnswShardSearch"
 
   /** Count of [[annQuery]] calls auto-dispatched to the driver-free
     * [[annQueryLarge]] plan (observability + the dispatch-fired spec).
@@ -960,9 +963,11 @@ object Hnsw {
     * (bit-identical, the index scanned once however large the file),
     * unless the caller passed `spillPath` to explicitly keep the chunked
     * durable-parquet form. Driver memory never holds more than one chunk
-    * either way (SURVEY.md §3.1). The node and edge
-    * tables are cogrouped by pid so each task rebuilds exactly one
-    * sub-graph. Tombstones are skipped during traversal (not by widening
+    * either way (SURVEY.md §3.1). Each shard slot's task searches the
+    * index's resident sub-graphs ([[HnswIndex.resident]]: built by the
+    * first query over the index's tables, then kept on the executors), so a
+    * call moves only the queries and k candidates per shard. Tombstones
+    * are skipped during traversal (not by widening
     * ef) — search cost is independent of the total delete count.
     * Output: (qid, rank, id, dist).
     *
@@ -980,89 +985,64 @@ object Hnsw {
     import spark.implicits._
     // size-aware dispatch: a query set past one chunk means the caller is
     // pointing a LARGE file at the small-batch path — serialized chunk
-    // round-trips through the driver, each one re-scanning the index. The
+    // round-trips through the driver, one search job per chunk. The
     // driver-free single-shuffle plan ([[annQueryLarge]], bit-identical —
     // spec-asserted) is strictly better there, so it is selected
     // automatically; only an explicit spillPath keeps the chunked form
     // (the caller asked for durable per-chunk parquet on a shared FS).
-    // The decision itself is a qid-only limit+count probe — it must NOT
-    // pull a full vector chunk to the driver just to abandon it.
-    if (spillPath.isEmpty &&
-        queries.select(col("qid")).limit(queryBatchSize + 1).count() > queryBatchSize) {
+    // The decision itself is a bounded collect of qids only: it never
+    // pulls a vector chunk just to drop it, and on an in-memory query
+    // frame it runs no job at all.
+    val probed = queries.select(col("qid")).limit(queryBatchSize + 1).collect().length
+    if (spillPath.isEmpty && probed > queryBatchSize) {
       largeDispatches.incrementAndGet()
       return annQueryLarge(index, queries, k, ef)
     }
-    val grouped = queries.select(col("qid").cast("long"), col("vector").cast("array<float>"))
-      .as[(Long, Array[Float])].toLocalIterator().asScala.grouped(queryBatchSize)
-    val first = if (grouped.hasNext) grouped.next().toArray else Array.empty[(Long, Array[Float])]
-    val perPart =
-      if (!grouped.hasNext) spillPath match {
-        // spill applies to the single-chunk case too (uniform contract:
-        // the directory always reflects THIS query's candidates)
-        case Some(path) =>
-          perPartFor(index, first, k, ef)._1.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
-        case None => perPartFor(index, first, k, ef)._1 // one chunk: fully lazy
-      }
-      else {
-        // each chunk is searched eagerly and its broadcast destroyed before
-        // the next chunk is collected — bounded driver memory regardless of
-        // query-file size; qids are disjoint across chunks so the global
-        // rank window below stays correct. Chunk materialization:
-        //   - spillPath (a shared-FS dir on a real cluster): durable parquet
-        //     appends — survives executor loss. The caller owns the dir for
-        //     the LIFETIME of the returned DataFrame: a second annQuery on
-        //     the same path overwrites it under an uncollected result;
-        //   - default localCheckpoint: executor-local blocks — fast, but an
-        //     executor loss mid-query fails the job (retry from the file).
-        var acc = List.empty[DataFrame]
-        var chunk = first
-        var more = true
-        var firstChunk = true
-        while (more) {
-          val (df, qB) = perPartFor(index, chunk, k, ef)
-          spillPath match {
-            case Some(path) =>
-              df.write.mode(if (firstChunk) "overwrite" else "append").parquet(path)
-            case None =>
-              acc ::= graft.operators.Checkpoints.tracked(df)
+    val rows = queries.select(col("qid").cast("long"), col("vector").cast("array<float>"))
+      .as[(Long, Array[Float])]
+    val perPart = spillPath match {
+      case None => perPartFor(index, rows.collect(), k, ef)._1 // one chunk: fully lazy
+      case Some(path) =>
+        // durable parquet appends, one chunk at a time: each chunk is
+        // searched eagerly and its broadcast destroyed before the next is
+        // collected, so driver memory stays bounded by one chunk. The
+        // caller owns the directory for the LIFETIME of the returned
+        // DataFrame: a second annQuery on the same path overwrites it
+        // under an uncollected result. Qids are disjoint across chunks, so
+        // the global rank window below stays correct.
+        val chunks = rows.toLocalIterator().asScala.grouped(queryBatchSize).map(_.toArray)
+        // at least one (possibly empty) chunk: the directory always
+        // reflects THIS query
+        (if (chunks.hasNext) chunks else Iterator(Array.empty[(Long, Array[Float])]))
+          .zipWithIndex.foreach { case (chunk, i) =>
+            val (df, qB) = perPartFor(index, chunk, k, ef)
+            df.write.mode(if (i == 0) "overwrite" else "append").parquet(path)
+            qB.destroy()
           }
-          qB.destroy()
-          firstChunk = false
-          if (grouped.hasNext) chunk = grouped.next().toArray else more = false
-        }
-        spillPath.map(spark.read.parquet(_)).getOrElse(acc.reduce(_ union _))
-      }
+        spark.read.parquet(path)
+    }
     rankTopK(perPart, k)
   }
 
   /** Distributed batch ANN with NO driver round-trip — the large-query-set
-    * twin of [[annQuery]] (which streams the query set through the driver
-    * in bounded chunks and re-scans the index per chunk). Here the query
-    * table stays distributed: each query row is replicated to every shard
-    * (`explode(sequence(0, P−1))`), unioned with the node and edge tables
-    * into one tagged stream, and shuffled ONCE by pid. Each task receives
-    * its shard sorted by (kind, id) — nodes first, then edges, then
-    * queries — so it rebuilds exactly one sub-graph and then streams the
-    * replicated queries through it; the global per-query top-k is the same
-    * bounded-heap partial aggregate as [[annQuery]]. Shuffle volume
-    * O(nodes + edges + q·P) in, O(q·k·P) out; driver memory O(1); the
-    * index is scanned exactly once however large the query set is.
-    * Bit-identical to [[annQuery]] on the same inputs (spec-asserted).
+    * twin of [[annQuery]] (which collects the query set to the driver and
+    * broadcasts it). Here the query table stays distributed: each query
+    * row is replicated to every shard slot (`explode(sequence(0, P−1))`)
+    * and shuffled to it, where it searches the slot's resident shard
+    * graphs ([[HnswIndex.resident]]); the global per-query top-k is the
+    * same bounded-heap partial aggregate as [[annQuery]]. Shuffle volume
+    * O(q·P) in, O(q·k·P) out; driver memory O(1). Bit-identical to
+    * [[annQuery]] on the same inputs (spec-asserted).
     * Output: (qid, rank, id, dist).
     */
   def annQueryLarge(index: HnswIndex, queries: DataFrame, k: Int, ef: Int = -1): DataFrame = {
-    // replicate to the ACTUAL shard set, not sequence(0, P-1): a streaming
-    // append ([[graft.streaming.StreamingOps.appendBatch]]) adds shards
-    // with pid >= P, which a meta-derived range would silently never
-    // search. The distinct-pid scan is lazy (no job at construction — the
-    // SQL rewrite builds this plan under EXPLAIN) and broadcast-tiny.
-    val pids = index.nodes.select(col("pid").cast("int").as("pid")).distinct()
-    val qRep = queries
-      .select(col("qid").cast("long").as("qid"), col("vector").cast("array<float>").as("vector"))
-      .crossJoin(broadcast(pids))
-      .select(col("pid"), col("qid"), col("vector"))
-    unionSearch(index, qRep, k, ef)
+    // replicate to slots, not to a pid list: a streaming append
+    // ([[graft.streaming.StreamingOps.appendBatch]]) adds shards with
+    // pid >= P, which live in the slot of pid mod P and are searched there
+    val qRep = queries.select(
+      explode(sequence(lit(0), lit(index.resident.graphs.slots - 1))).as("key"),
+      col("qid").cast("long").as("qid"), col("vector").cast("array<float>").as("vector"))
+    shardSearch(index, qRep, allShards = true, k, ef)
   }
 
   /** Centroid-routed batch ANN — the sublinear-in-P query path over a
@@ -1114,20 +1094,14 @@ object Hnsw {
       .select("qid", "pid").distinct()
   }
 
-  /** The search phase of [[annQueryRouted]]: semi-join-prune the index to
-    * the probed shards, replicate each query only to its probed shards,
-    * and run the shared single-shuffle engine.
+  /** The search phase of [[annQueryRouted]]: replicate each query only to
+    * its probed shards and search their resident graphs. Only the slots
+    * that receive a query load their graphs.
     */
   private def routedSearch(index: HnswIndex, q: DataFrame, probedPids: DataFrame,
-                           k: Int, ef: Int): DataFrame = {
-    val activePids = probedPids.select("pid").distinct()
-    // only probed shards ship: the node/edge scans are pruned by a
-    // broadcast semi-join before the single pid shuffle
-    val pruned = index.copy(
-      nodes = index.nodes.join(broadcast(activePids), Seq("pid"), "left_semi"),
-      edges = index.edges.join(broadcast(activePids), Seq("pid"), "left_semi"))
-    unionSearch(pruned, q.join(probedPids, "qid").select("pid", "qid", "vector"), k, ef)
-  }
+                           k: Int, ef: Int): DataFrame =
+    shardSearch(index, q.join(probedPids, "qid").select(col("pid").as("key"), col("qid"), col("vector")),
+      allShards = false, k, ef)
 
   /** Exact-rescore refinement of [[annQueryRouted]] — the
     * [[graft.operators.Pq.ivfPqTopKRefined]] pattern applied to the routed
@@ -2044,59 +2018,20 @@ object Hnsw {
         .agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
     else nSub * probedUnion
 
-  /** Shared engine of [[annQueryLarge]]/[[annQueryRouted]]: queries arrive
-    * already replicated to their target shards as (pid, qid, vector); union
-    * with the node/edge tables into one tagged stream, shuffle ONCE by pid,
-    * rebuild each sub-graph from its sorted stream, stream the queries
-    * through it, global top-k merge.
+  /** Shared engine of [[annQueryLarge]]/[[annQueryRouted]]: query rows
+    * (key, qid, vector) are shuffled to the slot of their key and search
+    * that slot's resident shard graphs — every shard in the slot when
+    * `allShards` (the key is a slot), else only shard `key` (a pid) —
+    * then the global top-k merge.
     */
-  private def unionSearch(index: HnswIndex, queriesWithPid: DataFrame, k: Int, ef: Int): DataFrame = {
+  private def shardSearch(index: HnswIndex, queries: DataFrame, allShards: Boolean,
+                          k: Int, ef: Int): DataFrame = {
     val spark = index.nodes.sparkSession
     import spark.implicits._
-    val m = index.meta
-    val efUsed = efBudget(m, k, ef)
-    val nodesU = index.nodes.select(
-      col("pid").cast("int").as("pid"), lit(0).as("kind"), col("id").cast("long").as("id"),
-      col("vector").cast("array<float>").as("vector"), col("level"), col("tombstone"),
-      lit(0).as("layer"), lit(0L).as("dst"))
-    val edgesU = index.edges.select(
-      col("pid").cast("int").as("pid"), lit(1).as("kind"), col("src").cast("long").as("id"),
-      lit(null).cast("array<float>").as("vector"), lit(0).as("level"), lit(false).as("tombstone"),
-      col("layer"), col("dst"))
-    val queriesU = queriesWithPid
-      .select(col("pid").cast("int").as("pid"), lit(2).as("kind"),
-        col("qid").cast("long").as("id"), col("vector").cast("array<float>").as("vector"),
-        lit(0).as("level"), lit(false).as("tombstone"),
-        lit(0).as("layer"), lit(0L).as("dst"))
-    val perPart = nodesU.union(edgesU).union(queriesU).as[AnnUnionRow]
-      .groupByKey(_.pid)
-      .flatMapSortedGroups(col("kind"), col("id")) { (_, rows) =>
-        val it = rows.buffered
-        val tomb = scala.collection.mutable.HashSet.empty[Long]
-        // lazy slices of the sorted stream: fromRows consumes nodes fully
-        // before touching edges, matching the (kind, id) sort order
-        val nodeRows = new Iterator[(Long, Array[Float], Int)] {
-          def hasNext: Boolean = it.hasNext && it.head.kind == 0
-          def next(): (Long, Array[Float], Int) = {
-            val n = it.next()
-            if (n.tombstone) tomb += n.id
-            (n.id, n.vector, n.level)
-          }
-        }
-        val edgeRows = new Iterator[(Long, Int, Long)] {
-          def hasNext: Boolean = it.hasNext && it.head.kind == 1
-          def next(): (Long, Int, Long) = { val e = it.next(); (e.id, e.layer, e.dst) }
-        }
-        val idx = LocalHnsw.fromRows(m.dim, m.m, m.max_m0, m.ef_construction, m.metric,
-          nodeRows, edgeRows)
-        if (idx.size == 0) Iterator.empty
-        else it.flatMap { q =>
-          idx.search(q.vector, k, efUsed, tomb.contains)
-            .iterator.map { case (id, dist) => (q.id, id, dist) }
-        }
-      }
-      .toDF("qid", "id", "dist")
-    rankTopK(perPart, k)
+    val rows = () => queries.select(col("key").cast("int"), col("qid").cast("long"),
+      col("vector").cast("array<float>")).as[(Int, Long, Array[Float])].rdd.map(r => (r._1, (r._2, r._3)))
+    val rdd = new ShardSearchRDD(index.resident, Some(rows), None, allShards, k, efBudget(index.meta, k, ef))
+    rankTopK(rdd.toDF("qid", "id", "dist"), k)
   }
 
   /** Filtered ANN — top-k restricted to an allowed id set (the standard
@@ -2120,10 +2055,12 @@ object Hnsw {
     * [[annQueryLarge]] (no driver round-trip) for big query sets;
     * `routed = true` (locality-sharded indexes) composes the same node
     * rewrite with [[annQueryRouted]] — the filter marks tombstones
-    * BEFORE the per-shard rebuild, so probed sub-graphs still route
-    * traversal through disallowed nodes and the semi-join shard pruning
-    * is unaffected (the rewrite touches the node table, never pids or
-    * the routing table).
+    * and the view searches the base index's resident shard graphs with
+    * those tombstones, so probed sub-graphs still route traversal through
+    * disallowed nodes and the shard routing is unaffected (the rewrite
+    * touches the node table, never pids or the routing table). A view
+    * loads no graphs of its own: a call shuffles only the view's
+    * tombstoned (pid, id) pairs.
     *
     * Calibration on a filtered view: an attached curve (and so the
     * no-flag 0.95 default and explicit recall targets) keeps driving the
@@ -2257,7 +2194,10 @@ object Hnsw {
     // with a sparse filter, BENCH_SCALE_FILTERED512_CLUSTERED.json);
     // hard contracts go through calibrateFiltered, as annQueryFiltered's
     // doc spells out.
-    index.copy(nodes = nodes, pq = None)
+    val view = index.copy(nodes = nodes, pq = None)
+    // only tombstone flags differ: the view searches the base's graphs
+    ResidentShards.registerView(view, index)
+    view
   }
 
   /** ANN for an in-memory query batch. Plan construction runs NO Spark job
@@ -2284,36 +2224,18 @@ object Hnsw {
       .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
         col("entry.id").as("id"), col("entry.dist").as("dist"))
 
-  /** Per-partition sub-graph search for one broadcast chunk: cogroup nodes
-    * and edges by pid, rebuild each sub-graph, emit (qid, id, dist)
-    * candidates (k per query per partition).
+  /** Resident sub-graph search for one broadcast chunk: every shard
+    * searches every query and emits (qid, id, dist) candidates (k per
+    * query per shard).
     */
   private def perPartFor(index: HnswIndex, qArr: Array[(Long, Array[Float])], k: Int, ef: Int):
       (DataFrame, org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]]) = {
     val spark = index.nodes.sparkSession
     import spark.implicits._
-    val m = index.meta
-    val efUsed = efBudget(m, k, ef)
-    val nodesDs = index.nodes.select("id", "vector", "level", "tombstone", "pid").as[NodeRow]
-      .groupByKey(_.pid)
-    val edgesDs = index.edges.select("pid", "src", "layer", "dst").as[EdgeRow]
-      .groupByKey(_.pid)
     val qB = spark.sparkContext.broadcast(qArr)
-    val df = nodesDs.cogroup(edgesDs) { (pid, nodeIt, edgeIt) =>
-      val nodeArr = nodeIt.toArray
-      if (nodeArr.isEmpty) Iterator.empty
-      else {
-        val tomb = nodeArr.iterator.filter(_.tombstone).map(_.id).toSet
-        val idx = LocalHnsw.fromRows(m.dim, m.m, m.max_m0, m.ef_construction, m.metric,
-          nodeArr.iterator.map(n => (n.id, n.vector, n.level)),
-          edgeIt.map(e => (e.src, e.layer, e.dst)))
-        qB.value.iterator.flatMap { case (qid, qv) =>
-          idx.search(qv, k, efUsed, tomb.contains)
-            .iterator.map { case (id, dist) => (qid, id, dist) }
-        }
-      }
-    }.toDF("qid", "id", "dist")
-    (df, qB)
+    val rdd = new ShardSearchRDD(index.resident, None, Some(qB), allShards = true, k,
+      efBudget(index.meta, k, ef))
+    (rdd.toDF("qid", "id", "dist"), qB)
   }
 
   // ---- mutation / lifecycle (reference M1/B7) ----

@@ -589,6 +589,25 @@ object Dedup {
     }.reduce(_ + _)
   }
 
+  /** How long a [[dupClusters]] round waits for its observed changed-row
+    * count before scanning for changed labels itself.
+    */
+  private val ConvergenceWaitMs = 10000L
+
+  /** Whether a [[dupClusters]] round changed no label: its observed
+    * `n_changed` (a null sum is an empty vertex set) when that arrives
+    * within `waitMs`, else an explicit scan of the round's labels `cp`.
+    */
+  private[graft] def roundConverged(obs: org.apache.spark.sql.Observation, cp: DataFrame,
+                                    waitMs: Long): Boolean =
+    try {
+      val row = scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(waitMs, "ms"))
+      row.isNullAt(row.fieldIndex("n_changed")) || row.getAs[Long]("n_changed") == 0L
+    } catch {
+      case _: java.util.concurrent.TimeoutException => cp.filter(col("comp") =!= col("prev")).isEmpty
+    }
+
   /** Duplicate-cluster assignment: connected components over a candidate
     * pair list (e.g. [[lshCandidatePairs]] output) by iterative min-label
     * propagation — component id = the minimum doc id reachable through the
@@ -659,22 +678,21 @@ object Dedup {
         .join(prop.select(col("id").as("comp"), col("comp").as("comp2")), Seq("comp"), "left")
         .select(col("id"), col("prev"), coalesce(col("comp2"), col("comp")).as("comp"))
       // convergence rides the materialize job as an observed metric (r17):
-      // the old shape ran a SECOND job per round (`filter(comp =!= prev)
-      // .isEmpty`) that re-scanned the freshly-written labels — on the
+      // the explicit check (`filter(comp =!= prev).isEmpty`) is a SECOND
+      // job per round that re-scans the freshly-written labels — on the
       // converged final round that scan reads the WHOLE table. Observation
-      // metrics fire through the eager localCheckpoint (probed), so the
-      // changed-row count now costs nothing: one job per round. The
-      // durable-parquet path keeps the explicit filter (its write goes
-      // through a command, and a blocking obs.get on a path that might not
-      // collect metrics would hang the loop — the read-back scan is the
-      // fault-tolerant mode's accepted price).
+      // metrics fire through the eager localCheckpoint, so the changed-row
+      // count normally costs nothing: one job per round. The wait for it
+      // is bounded — should the metric never arrive, the round falls back
+      // to the explicit check instead of hanging. The durable-parquet path
+      // always takes the explicit check (its write goes through a command
+      // — the read-back scan is the fault-tolerant mode's accepted price).
       val next = spillPath match {
         case None =>
           val obs = new org.apache.spark.sql.Observation()
           val cp = Checkpoints.tracked(jumped.observe(obs,
             sum(when(col("comp") =!= col("prev"), 1L).otherwise(0L)).as("n_changed")))
-          converged = Option(obs.get("n_changed"))
-            .forall(_.asInstanceOf[Long] == 0L) // null sum = empty vertex set
+          converged = roundConverged(obs, cp, ConvergenceWaitMs)
           cp
         case _ =>
           val cp = Checkpoints.materialize(jumped, sub(s"labels_${iter + 1}"))

@@ -102,6 +102,28 @@ class DedupSpec extends SparkSpec {
     assert(comp.values.toSet === Set(0L), s"chain did not fully converge: ${comp.values.toSet}")
   }
 
+  test("dup clusters: the explicit convergence check agrees with the observed count") {
+    // a round's labels as (id, prev, comp): unchanged, and with one moved label
+    val still = Seq((1L, 1L, 1L), (2L, 1L, 1L), (3L, 3L, 3L)).toDF("id", "prev", "comp")
+    val moved = Seq((1L, 1L, 1L), (2L, 2L, 1L), (3L, 3L, 3L)).toDF("id", "prev", "comp")
+    Seq(still -> true, moved -> false).foreach { case (round, want) =>
+      val obs = new org.apache.spark.sql.Observation()
+      val cp = round.observe(obs,
+        sum(when(col("comp") =!= col("prev"), 1L).otherwise(0L)).as("n_changed")).localCheckpoint()
+      assert(Dedup.roundConverged(obs, cp, waitMs = 10000L) === want, "observed count")
+      // an observation that never reports: the wait times out and the
+      // round's labels are scanned instead
+      val silent = new org.apache.spark.sql.Observation()
+      assert(Dedup.roundConverged(silent, cp, waitMs = 0L) === want, "explicit fallback")
+    }
+    val pairs = (0L until 40L).map(i => (i, i + 1)) ++ Seq((100L, 101L), (101L, 90L), (200L, 300L))
+    val docs = ((0L to 41L) ++ Seq(90L, 100L, 101L, 200L, 300L, 500L)).toDF("doc_id")
+    val labels = Dedup.dupClusters(docs, pairs.toDF("id_a", "id_b"), "doc_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(40L) === 0L && labels(101L) === 90L && labels(300L) === 200L)
+    assert(labels(500L) === 500L)
+  }
+
   test("contamination: shared-shingle overlap flags only docs over the threshold") {
     val bench = Seq((100L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
     val train = Seq(

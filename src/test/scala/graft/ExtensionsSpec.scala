@@ -484,7 +484,8 @@ class ExtensionsSpec extends AnyFunSuite {
       s"SELECT id, vector_cosine_distance(vector, $qSql) AS dist FROM emb_decay ORDER BY dist LIMIT 5")
     assert(IndexRegistry.rewriteCount === before + 1, "decay-regime rewrite did not fire")
     val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("MapGroups") && !plan.contains("CoGroup"),
+    assert(!plan.contains("MapGroups") && !plan.contains("CoGroup") &&
+      !plan.contains(Hnsw.ShardSearchName),
       "decay regime must not rebuild sub-graphs in the SQL plan")
     val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got.head._1 === 7L && math.abs(got.head._2) < 1e-12,
@@ -499,7 +500,8 @@ class ExtensionsSpec extends AnyFunSuite {
         |GROUP BY q.qid""".stripMargin)
     assert(IndexRegistry.rewriteCount === before2 + 1, "batch decay rewrite did not fire")
     val bplan = batch.queryExecution.executedPlan.toString
-    assert(!bplan.contains("MapGroups") && !bplan.contains("CoGroup"))
+    assert(!bplan.contains("MapGroups") && !bplan.contains("CoGroup") &&
+      !bplan.contains(Hnsw.ShardSearchName))
     batch.collect().foreach { r =>
       val top = r.getSeq[org.apache.spark.sql.Row](1)
       assert(top.head.getLong(1) === r.getLong(0) && math.abs(top.head.getDouble(0)) < 1e-12)

@@ -49,6 +49,40 @@ class HnswRoutedSpec extends SparkSpec {
     assert(routedAll === all, "probing every cell must degenerate to the all-shard result")
   }
 
+  test("resident shards: annQueryRouted is bit-identical to a per-call rebuild of its probed shards") {
+    import spark.implicits._
+    val qs = input.filter(col("id") % 45 === 3).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    val qDf = qs.toDF("qid", "vector")
+    val ef = 24
+    // a streaming-appended batch lands in shards with pid >= P
+    val dir = Files.createTempDirectory("hnsw-resident-routed").toString
+    Hnsw.save(routed, dir, autoCalibrate = false)
+    graft.streaming.StreamingOps.appendBatchRouted(
+      input.filter(col("id") % 4 === 1).select((col("id") + 1000000L).as("id"), col("vector")),
+      dir, params, batchId = 0L)
+    val appended = Hnsw.load(spark, dir)
+    assert(appended.nodes.filter(col("pid") >= params.numPartitions).count() > 0)
+    val cases = Seq(
+      "plain" -> routed,
+      "deleted" -> Hnsw.delete(routed, qs.take(3).map(_._1)),
+      "appended" -> appended,
+      "filter view" -> Hnsw.withAllowed(routed, input.filter(col("id") % 3 =!= 1).select("id")))
+    cases.foreach { case (name, idx) =>
+      Seq(4, 16).foreach { probe =>
+        val probed = Hnsw.probedPidsFor(idx, qDf, probe).collect()
+          .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getInt(1)).toSet }
+        val want = HnswSparkSpec.rebuildReference(idx, qs, k = 7, ef,
+          pidsOf = q => pid => probed.getOrElse(q, Set.empty[Int]).contains(pid))
+        assert(want.nonEmpty, name)
+        assert(Hnsw.annQueryRouted(idx, qDf, k = 7, probeCells = probe, ef = ef)
+          .collect().map(_.toSeq).toSet === want, s"$name at probe $probe")
+      }
+    }
+    assert(Hnsw.annQueryRouted(appended, qDf, k = 7, probeCells = 16, ef = ef).collect()
+      .exists(_.getLong(2) >= 1000000L), "appended shards must be searched")
+  }
+
   test("routed probe of a quarter of the cells keeps >=0.9x the all-shard recall at lower cost") {
     // sf0.01 (5k vectors): at sf0.001's 500 vectors a 16-cell split leaves
     // ~31 vectors/cell, so a query's top-10 intrinsically spans many cells
@@ -491,7 +525,8 @@ class HnswRoutedSpec extends SparkSpec {
     assert(!Hnsw.traversalDecays(idx.meta, k = 1, ef = 50))
     val dec = Hnsw.annQueryAdaptive(idx, q, k = 1, ef = 2)
     val decPlan = dec.queryExecution.executedPlan.toString
-    assert(!decPlan.contains("MapGroups") && !decPlan.contains("CoGroup"),
+    assert(!decPlan.contains("MapGroups") && !decPlan.contains("CoGroup") &&
+      !decPlan.contains(Hnsw.ShardSearchName),
       "decay regime must not rebuild sub-graphs — brute force within probed shards")
     // 600 uniform queries probing C/4 cells cover the union per query —
     // the scan side of the decision (exact-scan when the union reaches
@@ -515,10 +550,10 @@ class HnswRoutedSpec extends SparkSpec {
     assert(Hnsw.lastDecayPick.get() === "probed-broadcast",
       s"small decayed batch must take the probed join, got ${Hnsw.lastDecayPick.get()}")
     // healthy ef at the same call site: the traversal plan (sub-graph
-    // rebuild operator present), same decision inputs otherwise
+    // search operator present), same decision inputs otherwise
     val trav = Hnsw.annQueryAdaptive(idx, q, k = 1, ef = 50)
     val travPlan = trav.queryExecution.executedPlan.toString
-    assert(travPlan.contains("MapGroups") || travPlan.contains("CoGroup"),
+    assert(travPlan.contains(Hnsw.ShardSearchName),
       "non-decayed regime must keep the graph traversal")
     idx.nodes.unpersist()
   }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.functions.Distances
-import graft.hnsw.{Hnsw, HnswParams}
+import graft.hnsw.{Hnsw, HnswIndex, HnswParams, LocalHnsw, ShardRegistry}
 import graft.operators.Knn
 
 class HnswSparkSpec extends SparkSpec {
@@ -222,5 +222,227 @@ class HnswSparkSpec extends SparkSpec {
 
     val rebuilt = Hnsw.rebuild(deleted, params)
     assert(rebuilt.nodes.count() === input.count() - 2)
+  }
+
+  // ---- resident shard graphs ----
+
+  private def queryArr(mod: Int): Array[(Long, Array[Float])] =
+    input.filter(col("id") % mod === 3).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  test("resident shards: bit-identical to a per-call rebuild on plain, deleted, merged and appended indexes") {
+    import spark.implicits._
+    val qs = queryArr(45)
+    val qDf = qs.toSeq.toDF("qid", "vector")
+    val ef = 24
+    // a streaming-style append: a second sub-graph under pid P, with ids
+    // disjoint from the base index
+    val extra = Hnsw.build(input.filter(col("id") % 3 === 0)
+      .select((col("id") + 1000000L).as("id"), col("vector")), params.copy(numPartitions = 1))
+    val appended = index.copy(
+      nodes = index.nodes.unionByName(extra.nodes.withColumn("pid", col("pid") + params.numPartitions)),
+      edges = index.edges.unionByName(extra.edges.withColumn("pid", col("pid") + params.numPartitions)))
+    val cases = Seq(
+      "plain" -> index,
+      "deleted" -> Hnsw.delete(index, qs.take(3).map(_._1).toSeq),
+      "merged" -> graft.hnsw.HnswMerge.merge(index, level0SampleMod = 4),
+      "appended" -> appended,
+      "filter view" -> Hnsw.withAllowed(index, input.filter(col("id") % 3 =!= 1).select("id")))
+    cases.foreach { case (name, idx) =>
+      val want = HnswSparkSpec.rebuildReference(idx, qs, k = 7, ef)
+      assert(want.nonEmpty, name)
+      assert(rowSet(Hnsw.annQuery(idx, qDf, k = 7, ef = ef)) === want, s"$name: annQuery")
+      assert(rowSet(Hnsw.annQueryBatch(idx, qs, k = 7, ef = ef)) === want, s"$name: annQueryBatch")
+      assert(rowSet(Hnsw.annQueryLarge(idx, qDf, k = 7, ef = ef)) === want, s"$name: annQueryLarge")
+    }
+    assert(HnswSparkSpec.rebuildReference(appended, qs, k = 7, ef).exists(_(2).asInstanceOf[Long] >= 1000000L),
+      "the appended shard must contribute results")
+  }
+
+  test("resident shards: a delete after a query never returns the deleted ids; views return only allowed ids") {
+    import spark.implicits._
+    val qs = queryArr(30)
+    val qDf = qs.toSeq.toDF("qid", "vector")
+    val before = Hnsw.annQuery(index, qDf, k = 10).collect()
+    val hit = before.map(_.getAs[Long]("id")).distinct.take(12).toSeq
+    val deleted = Hnsw.delete(index, hit)
+    Seq(Hnsw.annQuery(deleted, qDf, k = 10), Hnsw.annQueryLarge(deleted, qDf, k = 10)).foreach { df =>
+      val ids = df.collect().map(_.getAs[Long]("id"))
+      assert(ids.nonEmpty && !ids.exists(hit.contains), "a deleted id came back")
+    }
+    // the base index keeps serving its own (untombstoned) graphs
+    assert(Hnsw.annQuery(index, qDf, k = 10).collect().map(_.toSeq).toSet === before.map(_.toSeq).toSet)
+    val allowed = input.filter(col("id") % 5 === 1).select("id")
+    val allowedIds = allowed.collect().map(_.getLong(0)).toSet
+    val view = Hnsw.withAllowed(index, allowed)
+    Seq(Hnsw.annQuery(view, qDf, k = 10), Hnsw.annQueryLarge(view, qDf, k = 10),
+        Hnsw.annQueryFiltered(index, qDf, k = 10, allowed)).foreach { df =>
+      val ids = df.collect().map(_.getAs[Long]("id"))
+      assert(ids.nonEmpty && ids.forall(allowedIds.contains), "a disallowed id came back")
+    }
+  }
+
+  test("resident shards: repeated single-query calls load each shard once and move only query rows") {
+    val idx = Hnsw.build(input, params)
+    val shards = idx.nodes.select("pid").distinct().count()
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("vector",
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
+    val qs = queryArr(10).take(20)
+    val sc = spark.sparkContext
+    val loadsBefore = ShardRegistry.loads.get()
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
+    val readBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        jobs.merge(g, 1, (a, b) => a + b)
+        js.stageIds.foreach(s => stageGroup.put(s, g))
+      }
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach { m =>
+          val g = stageGroup.getOrDefault(te.stageId, "")
+          readBytes.merge(g, m.shuffleReadMetrics.totalBytesRead, (a, b) => a + b)
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      qs.indices.foreach { i =>
+        sc.setJobGroup(s"resident-call-$i", "resident shard spec")
+        val one = spark.createDataFrame(java.util.List.of(
+          org.apache.spark.sql.Row(qs(i)._1, qs(i)._2)), schema)
+        val rows = Hnsw.annQuery(idx, one, k = 5).collect()
+        sc.clearJobGroup()
+        assert(rows.length === 5)
+      }
+      Thread.sleep(1000) // listener events are asynchronous
+    } finally sc.removeSparkListener(listener)
+    assert(ShardRegistry.loads.get() - loadsBefore === shards, "fromRows must run once per shard over all calls")
+    (1 until qs.length).foreach { i =>
+      val g = s"resident-call-$i"
+      assert(jobs.getOrDefault(g, 0) <= 3, s"call $i ran ${jobs.get(g)} jobs")
+      assert(readBytes.getOrDefault(g, 0L) < 100000L, s"call $i read ${readBytes.get(g)} shuffle bytes")
+    }
+  }
+
+  test("resident shards: filter views and same-graph copies load nothing; dead indexes are dropped") {
+    import spark.implicits._
+    val qDf = queryArr(60).toSeq.toDF("qid", "vector")
+    val base = Hnsw.build(input, params)
+    Hnsw.annQuery(base, qDf, k = 5).collect()
+    val baseKey = base.resident.graphs.key
+    val keys = ShardRegistry.residentKeys
+    val loads = ShardRegistry.loads.get()
+    assert(keys.contains(baseKey))
+    (0 until 50).foreach { i =>
+      val allowed = input.filter(col("id") % 50 =!= i).select("id")
+      assert(Hnsw.annQueryFiltered(base, qDf, k = 5, allowed).collect().nonEmpty)
+    }
+    val copy = base.copy(calibration = Nil, pq = None)
+    assert(copy.resident.graphs eq base.resident.graphs)
+    assert(Hnsw.annQuery(copy, qDf, k = 5).collect().nonEmpty)
+    ShardRegistry.sweep()
+    assert(ShardRegistry.loads.get() === loads, "views and copies must search the base index's graphs")
+    assert((ShardRegistry.residentKeys -- keys).isEmpty)
+    // a delete is its own index value with its own graphs: once the driver
+    // drops it, Spark's cleaner removes its token and the registry its slots
+    def queriedDelete(): Long = {
+      val d = Hnsw.delete(base, Seq(1L))
+      assert(Hnsw.annQuery(d, qDf, k = 5).collect().nonEmpty)
+      d.resident.graphs.key
+    }
+    val deadKey = queriedDelete()
+    assert(ShardRegistry.residentKeys.contains(deadKey))
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (ShardRegistry.residentKeys.contains(deadKey) && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+      ShardRegistry.sweep()
+    }
+    assert(!ShardRegistry.residentKeys.contains(deadKey), "an unreachable index still holds resident shards")
+    assert(ShardRegistry.residentKeys.contains(baseKey), "the live base index must keep its shards")
+    assert(Hnsw.annQuery(base, qDf, k = 5).collect().nonEmpty)
+  }
+
+  test("resident shards: an index in a restarted SparkContext never gets the stopped context's graphs") {
+    import scala.jdk.CollectionConverters._
+    // a SparkContext restart needs its own JVM: this suite's session is shared
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+      .filterNot(_.startsWith("-Xmx")) :+ "-Xmx1g"
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmArgs ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.ResidentRestartCheck")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+    assert(proc.waitFor() === 0 && out.contains("RESTART OK"), out.takeRight(4000))
+  }
+}
+
+/** Queries an index in one SparkContext, stops it, and in a new context
+  * queries a different index whose token broadcast got the same id.
+  * Prints `RESTART OK` when the second index answered from its own graphs.
+  * Run by HnswSparkSpec in a JVM of its own.
+  */
+object ResidentRestartCheck {
+  def main(args: Array[String]): Unit = {
+    import org.apache.spark.sql.SparkSession
+    def start() = SparkSession.builder().master("local[2]").appName("resident-restart")
+      .config("spark.ui.enabled", "false").config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    val params = HnswParams(dim = 8, m = 8, efConstruction = 32, numPartitions = 2)
+    // the same vectors under disjoint ids in each context
+    val vecs = (0 until 300).map { i => val r = new scala.util.Random(i); Array.fill(8)(r.nextFloat()) }
+    def rows(spark: SparkSession, base: Long) = {
+      import spark.implicits._
+      vecs.zipWithIndex.map { case (v, i) => (base + i, v) }.toDF("id", "vector")
+    }
+    val first = start()
+    (0 until 50).foreach(_ => first.sparkContext.broadcast(0)) // room for the second context to catch up
+    val a = Hnsw.build(rows(first, 0L), params)
+    require(Hnsw.annQuery(a, rows(first, 0L).limit(5).withColumnRenamed("id", "qid"), k = 3)
+      .collect().forall(_.getAs[Long]("id") < 1000000L))
+    val tokenId = a.resident.graphs.token.id
+    first.stop()
+    val second = start()
+    val b = Hnsw.build(rows(second, 1000000L), params)
+    var last = second.sparkContext.broadcast(0).id
+    while (last < tokenId - 1) last = second.sparkContext.broadcast(0).id
+    require(b.resident.graphs.token.id == tokenId, s"token ids differ: ${b.resident.graphs.token.id} vs $tokenId")
+    val got = Hnsw.annQuery(b, rows(second, 1000000L).limit(5).withColumnRenamed("id", "qid"), k = 3)
+      .collect().map(_.getAs[Long]("id"))
+    require(got.nonEmpty && got.forall(_ >= 1000000L), s"served the stopped context's graphs: ${got.toSeq}")
+    second.stop()
+    println("RESTART OK")
+  }
+}
+
+object HnswSparkSpec {
+
+  /** The per-call rebuild the query paths used before shards became
+    * resident, on the driver: every shard's graph from its rows, every
+    * query searched in every shard, then the (dist, id) top-k with
+    * duplicate ids collapsed. Rows are (qid, rank, id, dist).
+    */
+  def rebuildReference(idx: HnswIndex, qs: Seq[(Long, Array[Float])], k: Int, ef: Int,
+                       pidsOf: Long => Int => Boolean = _ => _ => true): Set[Seq[Any]] = {
+    val m = idx.meta
+    val nodes = idx.nodes.select("pid", "id", "vector", "level", "tombstone").collect()
+      .groupBy(_.getInt(0))
+    val edges = idx.edges.select("pid", "src", "layer", "dst").collect().groupBy(_.getInt(0))
+    val shards = nodes.map { case (pid, ns) =>
+      val g = LocalHnsw.fromRows(m.dim, m.m, m.max_m0, m.ef_construction, m.metric,
+        ns.iterator.map(r => (r.getLong(1), r.getSeq[Float](2).toArray, r.getInt(3))),
+        edges.getOrElse(pid, Array.empty).iterator.map(r => (r.getLong(1), r.getInt(2), r.getLong(3))))
+      (pid, g, ns.filter(_.getBoolean(4)).map(_.getLong(1)).toSet)
+    }
+    qs.flatMap { case (qid, v) =>
+      shards.iterator.filter(s => pidsOf(qid)(s._1))
+        .flatMap { case (_, g, tomb) => g.search(v, k, ef, tomb.contains) }.toSeq
+        .groupBy(_._1).toSeq.map { case (id, c) => (c.map(_._2).min, id) }.sorted.take(k)
+        .zipWithIndex.map { case ((dist, id), i) => Seq[Any](qid, i + 1, id, dist) }
+    }.toSet
   }
 }
