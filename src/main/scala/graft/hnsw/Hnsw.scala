@@ -357,7 +357,7 @@ object Hnsw {
     * what keeps routed recall near the all-shard level on
     * boundary-heavy (e.g. isotropic) data, because a neighbor just
     * across one cell boundary is still found from the probed side.
-    * Duplicates are merged away at query time (rankTopK dedup),
+    * Duplicates are merged away at query time (the top-k merge's dedup),
     * collapsed by [[rebuild]], and excluded from num_nodes. spill = 0
     * disables (exactly one copy each).
     *
@@ -965,8 +965,11 @@ object Hnsw {
     * durable-parquet form. Driver memory never holds more than one chunk
     * either way (SURVEY.md §3.1). Each shard slot's task searches the
     * index's resident sub-graphs ([[HnswIndex.resident]]: built by the
-    * first query over the index's tables, then kept on the executors), so a
-    * call moves only the queries and k candidates per shard. Tombstones
+    * first query over the index's tables, then kept on the executors), and
+    * the per-query top-k merge runs inside the same RDD, so a call is one
+    * Spark job of one search task per slot ([[ResidentShards.slots]]:
+    * `min(P, cores)` in local mode, P on a cluster) plus `min(q, slots)`
+    * merge tasks that moves only k candidates per query and slot. Tombstones
     * are skipped during traversal (not by widening
     * ef) — search cost is independent of the total delete count.
     * Output: (qid, rank, id, dist).
@@ -990,18 +993,20 @@ object Hnsw {
     // spec-asserted) is strictly better there, so it is selected
     // automatically; only an explicit spillPath keeps the chunked form
     // (the caller asked for durable per-chunk parquet on a shared FS).
-    // The decision itself is a bounded collect of qids only: it never
-    // pulls a vector chunk just to drop it, and on an in-memory query
-    // frame it runs no job at all.
-    val probed = queries.select(col("qid")).limit(queryBatchSize + 1).collect().length
-    if (spillPath.isEmpty && probed > queryBatchSize) {
+    // A frame whose plan bounds it to one chunk (an in-memory relation, a
+    // small limit) needs no decision. Any other frame is decided by a
+    // bounded collect of qids only: it never pulls a vector chunk just to
+    // drop it.
+    val oneChunk = queries.queryExecution.optimizedPlan.maxRows.exists(_ <= queryBatchSize)
+    if (spillPath.isEmpty && !oneChunk &&
+        queries.select(col("qid")).limit(queryBatchSize + 1).collect().length > queryBatchSize) {
       largeDispatches.incrementAndGet()
       return annQueryLarge(index, queries, k, ef)
     }
     val rows = queries.select(col("qid").cast("long"), col("vector").cast("array<float>"))
       .as[(Long, Array[Float])]
-    val perPart = spillPath match {
-      case None => perPartFor(index, rows.collect(), k, ef)._1 // one chunk: fully lazy
+    spillPath match {
+      case None => broadcastSearch(index, rows.collect(), k, ef)._1 // one chunk: fully lazy
       case Some(path) =>
         // durable parquet appends, one chunk at a time: each chunk is
         // searched eagerly and its broadcast destroyed before the next is
@@ -1009,36 +1014,36 @@ object Hnsw {
         // caller owns the directory for the LIFETIME of the returned
         // DataFrame: a second annQuery on the same path overwrites it
         // under an uncollected result. Qids are disjoint across chunks, so
-        // the global rank window below stays correct.
+        // each chunk writes its queries' final ranked rows.
         val chunks = rows.toLocalIterator().asScala.grouped(queryBatchSize).map(_.toArray)
         // at least one (possibly empty) chunk: the directory always
         // reflects THIS query
         (if (chunks.hasNext) chunks else Iterator(Array.empty[(Long, Array[Float])]))
           .zipWithIndex.foreach { case (chunk, i) =>
-            val (df, qB) = perPartFor(index, chunk, k, ef)
+            val (df, qB) = broadcastSearch(index, chunk, k, ef)
             df.write.mode(if (i == 0) "overwrite" else "append").parquet(path)
             qB.destroy()
           }
         spark.read.parquet(path)
     }
-    rankTopK(perPart, k)
   }
 
   /** Distributed batch ANN with NO driver round-trip — the large-query-set
     * twin of [[annQuery]] (which collects the query set to the driver and
     * broadcasts it). Here the query table stays distributed: each query
-    * row is replicated to every shard slot (`explode(sequence(0, P−1))`)
-    * and shuffled to it, where it searches the slot's resident shard
-    * graphs ([[HnswIndex.resident]]); the global per-query top-k is the
-    * same bounded-heap partial aggregate as [[annQuery]]. Shuffle volume
-    * O(q·P) in, O(q·k·P) out; driver memory O(1). Bit-identical to
-    * [[annQuery]] on the same inputs (spec-asserted).
+    * row is replicated to every one of the S shard slots
+    * ([[ResidentShards.slots]], `explode(sequence(0, S−1))`) and shuffled
+    * to it, where it searches
+    * the slot's resident shard graphs ([[HnswIndex.resident]]); the global
+    * per-query top-k is the same bounded-heap merge as [[annQuery]]'s.
+    * Shuffle volume O(q·S) in, O(q·k·S) out; driver memory O(1).
+    * Bit-identical to [[annQuery]] on the same inputs (spec-asserted).
     * Output: (qid, rank, id, dist).
     */
   def annQueryLarge(index: HnswIndex, queries: DataFrame, k: Int, ef: Int = -1): DataFrame = {
     // replicate to slots, not to a pid list: a streaming append
     // ([[graft.streaming.StreamingOps.appendBatch]]) adds shards with
-    // pid >= P, which live in the slot of pid mod P and are searched there
+    // pid >= P, which live in the slot of pid mod slots and are searched there
     val qRep = queries.select(
       explode(sequence(lit(0), lit(index.resident.graphs.slots - 1))).as("key"),
       col("qid").cast("long").as("qid"), col("vector").cast("array<float>").as("vector"))
@@ -1049,10 +1054,9 @@ object Hnsw {
     * locality-sharded index ([[buildRouted]]). Each query probes its
     * `probeCells` nearest k-means cells (broadcast centroid table, bounded
     * heap — IVF's nprobe, reused); the query is then replicated ONLY to the
-    * distinct shards owning those cells, and — unlike the all-shard paths —
-    * the node/edge tables are semi-joined down to the probed shards, so a
-    * query batch touching s of P shards ships s/P of the index through the
-    * shuffle. Per-query cost O(s·ef) instead of O(P·ef): query cost no
+    * distinct shards owning those cells, and only the probed shards'
+    * resident graphs are built and searched. Per-query cost O(s·ef)
+    * instead of O(P·ef): query cost no
     * longer grows with cluster/data size, the recall trade is nprobe-style
     * (probe more cells → higher recall, measured in HnswRoutedSpec).
     *
@@ -2022,7 +2026,8 @@ object Hnsw {
     * (key, qid, vector) are shuffled to the slot of their key and search
     * that slot's resident shard graphs — every shard in the slot when
     * `allShards` (the key is a slot), else only shard `key` (a pid) —
-    * then the global top-k merge.
+    * and the global top-k merge runs in `slots` partitions of the same
+    * RDD ([[ShardSearchRDD.ranked]]).
     */
   private def shardSearch(index: HnswIndex, queries: DataFrame, allShards: Boolean,
                           k: Int, ef: Int): DataFrame = {
@@ -2030,8 +2035,8 @@ object Hnsw {
     import spark.implicits._
     val rows = () => queries.select(col("key").cast("int"), col("qid").cast("long"),
       col("vector").cast("array<float>")).as[(Int, Long, Array[Float])].rdd.map(r => (r._1, (r._2, r._3)))
-    val rdd = new ShardSearchRDD(index.resident, Some(rows), None, allShards, k, efBudget(index.meta, k, ef))
-    rankTopK(rdd.toDF("qid", "id", "dist"), k)
+    val search = new ShardSearchRDD(index.resident, Some(rows), None, allShards, k, efBudget(index.meta, k, ef))
+    ShardSearchRDD.ranked(search, index.resident.graphs.slots).toDF("qid", "rank", "id", "dist")
   }
 
   /** Filtered ANN — top-k restricted to an allowed id set (the standard
@@ -2207,12 +2212,14 @@ object Hnsw {
     */
   def annQueryBatch(index: HnswIndex, qArr: Array[(Long, Array[Float])],
                     k: Int, ef: Int = -1): DataFrame =
-    rankTopK(perPartFor(index, qArr, k, ef)._1, k)
+    broadcastSearch(index, qArr, k, ef)._1
 
   /** Global per-query top-k over the per-partition candidates via the
     * bounded-heap partial aggregate — shuffle O(q·k), not a full window
     * sort of the q·k·P candidate set. Deterministic (dist asc, id asc),
     * bit-identical to the window form (equivalence spec-tested for Knn).
+    * The exact and PQ tiers merge with it; the graph-search paths merge
+    * the same way inside their search RDD ([[ShardSearchRDD.ranked]]).
     */
   private def rankTopK(perPart: DataFrame, k: Int): DataFrame =
     perPart.groupBy(col("qid"))
@@ -2225,17 +2232,19 @@ object Hnsw {
         col("entry.id").as("id"), col("entry.dist").as("dist"))
 
   /** Resident sub-graph search for one broadcast chunk: every shard
-    * searches every query and emits (qid, id, dist) candidates (k per
-    * query per shard).
+    * searches every query, and each query's top-k is merged in
+    * `min(q, slots)` partitions of the same RDD. Output: (qid, rank, id,
+    * dist) and the chunk's broadcast.
     */
-  private def perPartFor(index: HnswIndex, qArr: Array[(Long, Array[Float])], k: Int, ef: Int):
+  private def broadcastSearch(index: HnswIndex, qArr: Array[(Long, Array[Float])], k: Int, ef: Int):
       (DataFrame, org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]]) = {
     val spark = index.nodes.sparkSession
     import spark.implicits._
     val qB = spark.sparkContext.broadcast(qArr)
-    val rdd = new ShardSearchRDD(index.resident, None, Some(qB), allShards = true, k,
+    val search = new ShardSearchRDD(index.resident, None, Some(qB), allShards = true, k,
       efBudget(index.meta, k, ef))
-    (rdd.toDF("qid", "id", "dist"), qB)
+    val parts = math.max(1, math.min(qArr.length, index.resident.graphs.slots))
+    (ShardSearchRDD.ranked(search, parts).toDF("qid", "rank", "id", "dist"), qB)
   }
 
   // ---- mutation / lifecycle (reference M1/B7) ----

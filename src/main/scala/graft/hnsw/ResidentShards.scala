@@ -8,12 +8,12 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
-import org.apache.spark.{Dependency, OneToOneDependency, Partition, Partitioner, SparkEnv, TaskContext}
+import org.apache.spark.{Dependency, HashPartitioner, OneToOneDependency, Partition, Partitioner, SparkEnv, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.BlockBridge
+import org.apache.spark.sql.graft.{BlockBridge, SchedulerBridge, TopKBuffer}
 
 /** One shard graph as the query path serves it: the graph and the ids
   * its node rows mark as tombstoned (deleted, or spill ghosts of a merged
@@ -21,9 +21,9 @@ import org.apache.spark.sql.graft.BlockBridge
   */
 private[hnsw] final class Shard(val pid: Int, val graph: LocalHnsw, val tomb: Set[Long])
 
-/** Maps a shard pid to its slot: home shards `0 until P` own one slot
-  * each, streaming-appended shards (`pid ≥ P`) share the slot of
-  * `pid mod P`.
+/** Maps a shard pid to its slot, `pid mod slots`: with at least P slots
+  * home shards `0 until P` own one slot each, and streaming-appended
+  * shards (`pid ≥ P`) share the slot of `pid mod slots` either way.
   */
 private[hnsw] final class SlotPartitioner(val numPartitions: Int) extends Partitioner {
   def getPartition(key: Any): Int = Math.floorMod(key.asInstanceOf[Int], numPartitions)
@@ -49,12 +49,22 @@ private[hnsw] final class SlotPartitioner(val numPartitions: Int) extends Partit
   * slots on its next access ([[ShardRegistry.sweep]]); the same cleaner
   * frees the shuffle output behind [[source]].
   *
+  * In local mode there are `min(P, cores)` slots (`cores` is the
+  * context's task slots, `local[N]` gives N), so a search runs in one wave
+  * of tasks: on fewer cores than shards, a slot holds several shards
+  * ([[SlotPartitioner]]). On a cluster, whose cores come and go with its
+  * executors while the slot count is fixed for the life of the graphs,
+  * every home shard keeps a slot of its own.
+  *
   * Nothing here runs a Spark job at construction: the lineage is built
   * when the first search job is submitted.
   */
 private[graft] final class ResidentShards(nodes: DataFrame, val edges: DataFrame, val meta: IndexMeta) {
   private[hnsw] val sc = nodes.sparkSession.sparkContext
-  val slots: Int = math.max(1, meta.num_partitions)
+  val slots: Int = {
+    val p = math.max(1, meta.num_partitions)
+    SchedulerBridge.localCores(sc).fold(p)(c => math.max(1, math.min(p, c)))
+  }
   /** Registry key: random, so the entries of an index from an earlier
     * SparkContext in the same JVM (whose broadcast ids restart at 0) can
     * never be served for this one.
@@ -124,21 +134,28 @@ private[graft] object ResidentShards {
 
 /** The executor-side registry of resident shard graphs. */
 private[graft] object ShardRegistry {
-  /** One slot's graphs; loaded at most once per (key, slot). `env` is
-    * the SparkEnv they were loaded under.
+  /** One slot's graphs, each built at most once per (key, slot). `env` is
+    * the SparkEnv they were loaded under; `pids` (null until the slot's
+    * rows are first read) are the slot's shards with node rows.
     */
-  private final class Entry(val broadcastId: Long, val env: SparkEnv) { var shards: Array[Shard] = _ }
+  private final class Entry(val broadcastId: Long, val env: SparkEnv) {
+    var pids: Set[Int] = _
+    var shards = Map.empty[Int, Shard]
+  }
 
   private val entries = new ConcurrentHashMap[(Long, Int), Entry]()
 
   /** [[LocalHnsw.fromRows]] calls made by the registry in this JVM. */
   private[graft] val loads = new AtomicLong()
 
-  /** The graphs of `slot` under `token`'s index key, built from `rows` on
-    * a miss (`rows` is not evaluated on a hit, so the shard's shuffle
-    * blocks are not read).
+  /** The graphs of `slot` under `token`'s index key, sorted by pid: every
+    * shard in the slot when `pid` is None, else shard `pid` (none when it
+    * has no node rows). Shards not yet built are built from one read of
+    * `rows`: every shard in the slot, or `pid` together with the shards in
+    * `more`. `rows` and `more` are evaluated only then, so a hit reads no
+    * shuffle block, and a shard no call has asked for is never built.
     */
-  private[hnsw] def getOrLoad(token: Broadcast[Long], slot: Int)(
+  private[hnsw] def getOrLoad(token: Broadcast[Long], slot: Int, pid: Option[Int], more: => Set[Int])(
       rows: => Iterator[(Int, (Iterable[NodeRow], Iterable[EdgeRow]))],
       build: (Int, Iterable[NodeRow], Iterable[EdgeRow]) => Shard): Array[Shard] = {
     sweep()
@@ -146,13 +163,23 @@ private[graft] object ShardRegistry {
     // takes the block's presence as the index being alive
     val key = token.value
     val e = entries.computeIfAbsent((key, slot), _ => new Entry(token.id, SparkEnv.get))
+    val asked = pid.map(Set(_))
     e.synchronized {
-      if (e.shards == null)
-        e.shards = rows.collect { case (pid, (ns, es)) if ns.nonEmpty =>
-          loads.incrementAndGet()
-          build(pid, ns, es)
-        }.toArray
-      e.shards
+      if (e.pids == null || asked.getOrElse(e.pids).exists(p => e.pids(p) && !e.shards.contains(p))) {
+        val wanted = asked.map(_ ++ more)
+        val pids = Set.newBuilder[Int]
+        rows.foreach { case (pid, (ns, es)) =>
+          if (ns.nonEmpty) {
+            pids += pid
+            if (!e.shards.contains(pid) && wanted.forall(_.contains(pid))) {
+              loads.incrementAndGet()
+              e.shards += pid -> build(pid, ns, es)
+            }
+          }
+        }
+        e.pids = pids.result()
+      }
+      asked.getOrElse(e.pids).toArray.sorted.flatMap(e.shards.get)
     }
   }
 
@@ -174,13 +201,16 @@ private final class SlotPartition(val index: Int, val source: Partition, val que
                                   val tombstones: Option[Partition]) extends Partition
 
 /** One task per slot: searches the slot's resident shards for the call's
-  * queries and emits (qid, id, dist), k candidates per query per shard.
-  * Queries come either from a broadcast (every query searches every
-  * shard) or, for distributed query sets, as a slot-partitioned RDD of
-  * (key, (qid, vector)) rows. With `allShards` the key is a slot and the
-  * query searches every shard in it; otherwise the key is the one pid to
-  * search. A filter view's tombstoned (pid, id) rows arrive
-  * slot-partitioned too, one shuffle of ids per call.
+  * queries and emits (qid, top-k buffer), one per query row: the query's
+  * best k candidates over the shards it searched in this slot, merged
+  * with the same heap, (dist, id) order and duplicate-id collapse as the
+  * `TopKByDist` aggregate. Queries come either from a broadcast (every
+  * query searches every shard) or, for distributed query sets, as a
+  * slot-partitioned RDD of (key, (qid, vector)) rows. With `allShards`
+  * the key is a slot and the query searches every shard in it; otherwise
+  * the key is the one pid to search, and only keyed shards are built. A
+  * filter view's tombstoned (pid, id) rows arrive slot-partitioned too,
+  * one shuffle of ids per call.
   *
   * Every parent is wired when the job is submitted, not when the plan is
   * built, so constructing the query plan runs no Spark job.
@@ -190,9 +220,7 @@ private[hnsw] final class ShardSearchRDD(
     @transient private val queryRows: Option[() => RDD[(Int, (Long, Array[Float]))]],
     broadcastQueries: Option[Broadcast[Array[(Long, Array[Float])]]],
     allShards: Boolean, k: Int, ef: Int)
-  extends RDD[(Long, Long, Double)](res.graphs.sc, Nil) {
-
-  setName(Hnsw.ShardSearchName)
+  extends RDD[(Long, TopKBuffer)](res.graphs.sc, Nil) {
 
   private val token = res.graphs.token
   private val meta = res.graphs.meta
@@ -215,7 +243,7 @@ private[hnsw] final class ShardSearchRDD(
       tombRdd.map(_.partitions(i)))
   }
 
-  override def compute(split: Partition, context: TaskContext): Iterator[(Long, Long, Double)] = {
+  override def compute(split: Partition, context: TaskContext): Iterator[(Long, TopKBuffer)] = {
     val p = split.asInstanceOf[SlotPartition]
     val queries: Iterator[(Int, (Long, Array[Float]))] = broadcastQueries match {
       case Some(b) => b.value.iterator.map(q => (p.index, q))
@@ -223,13 +251,6 @@ private[hnsw] final class ShardSearchRDD(
     }
     if (!queries.hasNext) Iterator.empty
     else {
-      val shards = ShardRegistry.getOrLoad(token, p.index)(
-        input[(Int, (Iterable[NodeRow], Iterable[EdgeRow]))](0).iterator(p.source, context),
-        (pid, ns, es) => {
-          val graph = LocalHnsw.fromRows(meta.dim, meta.m, meta.max_m0, meta.ef_construction, meta.metric,
-            ns.iterator.map(n => (n.id, n.vector, n.level)), es.iterator.map(e => (e.src, e.layer, e.dst)))
-          new Shard(pid, graph, ns.iterator.filter(_.tombstone).map(_.id).toSet)
-        })
       val tombOf: Shard => Long => Boolean = tombDep match {
         case None => s => s.tomb.contains
         case Some(j) =>
@@ -239,14 +260,53 @@ private[hnsw] final class ShardSearchRDD(
           }
           s => byPid.get(s.pid).fold((_: Long) => false)(set => set.contains)
       }
-      val searched = shards.map(s => (s, tombOf(s)))
-      queries.flatMap { case (key, (qid, v)) =>
-        searched.iterator.filter { case (s, _) => allShards || s.pid == key }.flatMap { case (s, tomb) =>
-          s.graph.search(v, k, ef, tomb).iterator.map { case (id, dist) => (qid, id, dist) }
+      def load(pid: Option[Int], more: => Set[Int]): Array[(Shard, Long => Boolean)] =
+        ShardRegistry.getOrLoad(token, p.index, pid, more)(
+          input[(Int, (Iterable[NodeRow], Iterable[EdgeRow]))](0).iterator(p.source, context),
+          (pid, ns, es) => {
+            val graph = LocalHnsw.fromRows(meta.dim, meta.m, meta.max_m0, meta.ef_construction, meta.metric,
+              ns.iterator.map(n => (n.id, n.vector, n.level)), es.iterator.map(e => (e.src, e.layer, e.dst)))
+            new Shard(pid, graph, ns.iterator.filter(_.tombstone).map(_.id).toSet)
+          }).map(s => (s, tombOf(s)))
+      def topK(shards: Array[(Shard, Long => Boolean)], v: Array[Float]): TopKBuffer = {
+        val top = new TopKBuffer(k, dedup = true)
+        shards.foreach { case (s, tomb) => s.graph.search(v, k, ef, tomb).foreach { case (id, d) => top.insert(d, id) } }
+        top
+      }
+      if (allShards) {
+        val shards = load(None, Set.empty)
+        queries.map { case (_, (qid, v)) => (qid, topK(shards, v)) }
+      } else {
+        // resolved per pid on its first query row, so the rows stream. A
+        // shard not built yet (a first call) costs one more pass over the
+        // task's query keys, and every shard they name is built from one
+        // read of the slot's source rows
+        lazy val taskPids = input[(Int, (Long, Array[Float]))](queryDep.get)
+          .iterator(p.queries.get, context).map(_._1).toSet
+        val byPid = mutable.HashMap.empty[Int, Array[(Shard, Long => Boolean)]]
+        queries.map { case (pid, (qid, v)) =>
+          (qid, topK(byPid.getOrElseUpdate(pid, load(Some(pid), taskPids)), v))
         }
       }
     }
   }
 
   private def input[T: ClassTag](j: Int): RDD[T] = dependencies(j).rdd.asInstanceOf[RDD[T]]
+}
+
+private[hnsw] object ShardSearchRDD {
+  /** The global per-query top-k of a shard search as (qid, rank, id,
+    * dist) rows, merged inside the RDD that the query's DataFrame scans
+    * (so its plan has no Exchange and a call is one job): the slot tasks'
+    * buffers are combined per qid in `parts` partitions. Named
+    * [[Hnsw.ShardSearchName]], so plans show `Scan HnswShardSearch`.
+    */
+  def ranked(search: ShardSearchRDD, parts: Int): RDD[(Long, Int, Long, Double)] = {
+    val merge = (a: TopKBuffer, b: TopKBuffer) => { a.mergeFrom(b); a }
+    search.combineByKey[TopKBuffer](identity, merge, merge, new HashPartitioner(parts))
+      .mapPartitions(_.flatMap { case (qid, top) =>
+        top.sorted.iterator.zipWithIndex.map { case ((dist, id), i) => (qid, i + 1, id, dist) }
+      })
+      .setName(Hnsw.ShardSearchName)
+  }
 }

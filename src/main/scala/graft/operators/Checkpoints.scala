@@ -54,6 +54,12 @@ private[graft] object Checkpoints {
   /** Run `body` with checkpoint tracking suspended on this thread: every
     * [[tracked]] checkpoint created inside is index-lifetime (survives
     * [[releaseTracked]]). For builders whose results ride module caches.
+    *
+    * Pinning is thread-local. A tracked checkpoint that `body` creates on
+    * another thread (a Future, a parallel collection, a thread pool) is
+    * registered as releasable, and the next [[releaseTracked]] unpersists
+    * it; since a localCheckpoint cannot recompute, its later consumers
+    * fail. Builders that fan out must pin on each thread that checkpoints.
     */
   def pinned[T](body: => T): T = {
     pinnedDepth.set(pinnedDepth.get + 1)

@@ -269,13 +269,15 @@ object Retrieval {
     */
   def lmDocScores(docs: DataFrame, idCol: String, textCol: String,
                   materialize: Boolean = true): DataFrame = {
-    // r17: the bigram stream is hash-repartitioned BY BIGRAM and the
-    // (id, bigram) count runs as a ONE-PHASE aggregate on top
-    // (HashPartitioning(bigram) satisfies the ClusteredDistribution(id,
-    // bigram) subset rule). The r16 shape ran partial aggregation keyed
-    // (id, bigram) before its exchange — over a corpus bigram stream those
-    // keys are MOSTLY UNIQUE, so the partial pass built a giant per-task
-    // hash table only to emit nearly every row unchanged (pure buffer
+    // The bigram stream is hash-repartitioned on (id, bigram) and the
+    // count runs as a ONE-PHASE aggregate on top (the exchange satisfies
+    // its ClusteredDistribution(id, bigram)). r17 keyed the exchange on
+    // bigram alone, which also satisfies it but sent every copy of a
+    // Zipfian head bigram to one task. The r16 shape ran partial
+    // aggregation keyed (id, bigram) before its exchange — over a corpus
+    // bigram stream those keys are MOSTLY UNIQUE, so the partial pass
+    // built a giant per-task hash table only to emit nearly every row
+    // unchanged (pure buffer
     // churn; guide §1.2 step 2). Interleaved min-of-3 at 1M docs:
     // 39.4 → 33.2 s for the docScores DAG (and 63.4 → 39.8 s for q96
     // end-to-end in a separate paired run). Two negatives pinned by the
@@ -288,7 +290,7 @@ object Retrieval {
       .select(col(idCol), TextFunctions.tokens(col(textCol)).as("w"))
       .select(col(idCol),
         explode(TextFunctions.wordShinglesFromTokens(col("w"), 2)).as("bigram"))
-      .repartition(col("bigram"))
+      .repartition(col(idCol), col("bigram"))
       .groupBy(col(idCol), col("bigram")).agg(count(lit(1)).as("n"))
     val docBg = if (materialize) Checkpoints.tracked(docBgAll) else docBgAll
     val pairCounts = docBg.groupBy("bigram").agg(sum(col("n")).as("n_pair"))

@@ -127,9 +127,9 @@ object StreamingOps {
     * `batchId` — so a stream restart that resets batchIds cannot collide
     * a new batch's pids with an earlier batch's sub-graphs. A re-DELIVERED
     * batch (foreachBatch retry after a sink failure) lands in a fresh pid
-    * block: its ids exist twice in different shards, which the per-query
-    * top-k dedup collapses ([[Hnsw]] rankTopK) — duplicated storage until
-    * [[Hnsw.rebuildRouted]] compacts.
+    * block: its ids exist twice in different shards, which the [[Hnsw]]
+    * query paths' per-query top-k merge collapses (dedup by id) —
+    * duplicated storage until [[Hnsw.rebuildRouted]] compacts.
     *
     * SINGLE WRITER: the read-maxPid → claim-block step is not atomic, so
     * two concurrent appenders can read the same maxPid, claim the same

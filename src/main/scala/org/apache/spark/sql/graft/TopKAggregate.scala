@@ -23,8 +23,11 @@ import org.apache.spark.sql.types._
   * — so even if two shards ever diverged in distance accumulation order
   * (they don't today: identical bytes, deterministic arithmetic), the
   * same neighbor still cannot take two ranks.
+  *
+  * Serializable, so RDD shuffles can merge buffers too (the resident HNSW
+  * shard search combines its per-slot buffers this way).
   */
-final class TopKBuffer(val k: Int, val dedup: Boolean = false) {
+final class TopKBuffer(val k: Int, val dedup: Boolean = false) extends Serializable {
   // parallel arrays as a max-heap on (dist, id); root = current worst
   val dists = new Array[Double](k)
   val ids = new Array[Long](k)

@@ -182,12 +182,15 @@ class ExtensionsSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       val before = IndexRegistry.rewriteCount
-      spark.sql(
+      val plain = spark.sql(
         s"EXPLAIN SELECT id, vector_l2(vector, $qSql) AS dist FROM emb_explain ORDER BY dist LIMIT 3")
-        .collect()
-      spark.sql(
+        .collect().map(_.getString(0)).mkString
+      val filtered = spark.sql(
         s"""EXPLAIN SELECT id, vector_l2(vector, $qSql) AS dist FROM emb_explain
-           |WHERE id % 2 = 0 ORDER BY dist LIMIT 3""".stripMargin).collect()
+           |WHERE id % 2 = 0 ORDER BY dist LIMIT 3""".stripMargin).collect().map(_.getString(0)).mkString
+      Seq(plain, filtered).foreach { plan =>
+        assert(plan.contains(s"Scan ${Hnsw.ShardSearchName}"), s"no resident shard search in\n$plan")
+      }
       // listener events are async; a short quiesce keeps the zero-job
       // assertion honest without private[spark] listenerBus access
       Thread.sleep(500)

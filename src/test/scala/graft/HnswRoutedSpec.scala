@@ -55,32 +55,78 @@ class HnswRoutedSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
     val qDf = qs.toDF("qid", "vector")
     val ef = 24
-    // a streaming-appended batch lands in shards with pid >= P
-    val dir = Files.createTempDirectory("hnsw-resident-routed").toString
-    Hnsw.save(routed, dir, autoCalibrate = false)
-    graft.streaming.StreamingOps.appendBatchRouted(
-      input.filter(col("id") % 4 === 1).select((col("id") + 1000000L).as("id"), col("vector")),
-      dir, params, batchId = 0L)
-    val appended = Hnsw.load(spark, dir)
-    assert(appended.nodes.filter(col("pid") >= params.numPartitions).count() > 0)
-    val cases = Seq(
-      "plain" -> routed,
-      "deleted" -> Hnsw.delete(routed, qs.take(3).map(_._1)),
-      "appended" -> appended,
-      "filter view" -> Hnsw.withAllowed(routed, input.filter(col("id") % 3 =!= 1).select("id")))
-    cases.foreach { case (name, idx) =>
-      Seq(4, 16).foreach { probe =>
-        val probed = Hnsw.probedPidsFor(idx, qDf, probe).collect()
-          .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getInt(1)).toSet }
-        val want = HnswSparkSpec.rebuildReference(idx, qs, k = 7, ef,
-          pidsOf = q => pid => probed.getOrElse(q, Set.empty[Int]).contains(pid))
-        assert(want.nonEmpty, name)
-        assert(Hnsw.annQueryRouted(idx, qDf, k = 7, probeCells = probe, ef = ef)
-          .collect().map(_.toSeq).toSet === want, s"$name at probe $probe")
+    // P <= cores (one shard per slot) and P > cores (two shards per slot)
+    Seq(routed, Hnsw.buildRouted(input, params.copy(numPartitions = 8), cellsPerShard = 4)).foreach { base =>
+      val p = base.meta.num_partitions
+      val cells = base.meta.num_cells
+      // a streaming-appended batch lands in shards with pid >= P
+      val dir = Files.createTempDirectory("hnsw-resident-routed").toString
+      Hnsw.save(base, dir, autoCalibrate = false)
+      graft.streaming.StreamingOps.appendBatchRouted(
+        input.filter(col("id") % 4 === 1).select((col("id") + 1000000L).as("id"), col("vector")),
+        dir, params.copy(numPartitions = p), batchId = 0L)
+      val appended = Hnsw.load(spark, dir)
+      assert(appended.nodes.filter(col("pid") >= p).count() > 0)
+      val cases = Seq(
+        "plain" -> base,
+        "deleted" -> Hnsw.delete(base, qs.take(3).map(_._1)),
+        "appended" -> appended,
+        "filter view" -> Hnsw.withAllowed(base, input.filter(col("id") % 3 =!= 1).select("id")))
+      cases.foreach { case (name, idx) =>
+        Seq(cells / 4, cells).foreach { probe =>
+          val probed = Hnsw.probedPidsFor(idx, qDf, probe).collect()
+            .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getInt(1)).toSet }
+          val want = HnswSparkSpec.rebuildReference(idx, qs, k = 7, ef,
+            pidsOf = q => pid => probed.getOrElse(q, Set.empty[Int]).contains(pid))
+          assert(want.nonEmpty, name)
+          assert(Hnsw.annQueryRouted(idx, qDf, k = 7, probeCells = probe, ef = ef)
+            .collect().map(_.toSeq).toSet === want, s"P=$p $name at probe $probe")
+        }
+      }
+      assert(Hnsw.annQueryRouted(appended, qDf, k = 7, probeCells = cells, ef = ef).collect()
+        .exists(_.getLong(2) >= 1000000L), s"P=$p: appended shards must be searched")
+      // the spill-assigned index stores border vectors in two shards: the
+      // all-shard paths search both copies, and the merge's duplicate-id
+      // collapse keeps each id to one rank
+      assert(base.nodes.count() > base.nodes.select("id").distinct().count(), "no spill copies: premise broken")
+      val want = HnswSparkSpec.rebuildReference(base, qs, k = 7, ef)
+      Seq("annQuery" -> Hnsw.annQuery(base, qDf, k = 7, ef = ef),
+          "annQueryBatch" -> Hnsw.annQueryBatch(base, qs.toArray, k = 7, ef = ef),
+          "annQueryLarge" -> Hnsw.annQueryLarge(base, qDf, k = 7, ef = ef)).foreach { case (name, df) =>
+        val rows = df.collect().map(_.toSeq)
+        assert(rows.toSet === want, s"P=$p spill-assigned: $name")
+        assert(rows.length === rows.map(r => (r(0), r(2))).distinct.length, s"P=$p $name: an id took two ranks")
       }
     }
-    assert(Hnsw.annQueryRouted(appended, qDf, k = 7, probeCells = 16, ef = ef).collect()
-      .exists(_.getLong(2) >= 1000000L), "appended shards must be searched")
+  }
+
+  test("resident shards: a first routed call builds only the shards it probes") {
+    val base = Hnsw.buildRouted(input, params.copy(numPartitions = 8), cellsPerShard = 4)
+    assert(base.resident.graphs.slots < base.meta.num_partitions, "needs slots holding several shards")
+    val q = input.filter(col("id") === 7L).select(col("id").as("qid"), col("vector"))
+    val probed = Hnsw.probedPidsFor(base, q, probeCells = 1).collect().map(_.getInt(1)).toSet
+    assert(probed.size === 1)
+    val loads = graft.hnsw.ShardRegistry.loads.get()
+    assert(Hnsw.annQueryRouted(base, q, k = 5, probeCells = 1).collect().nonEmpty)
+    assert(graft.hnsw.ShardRegistry.loads.get() - loads === 1L, "only the probed shard may be built")
+    // a later all-shard call builds the rest, once
+    assert(Hnsw.annQueryLarge(base, q, k = 5).collect().nonEmpty)
+    val shards = base.nodes.select("pid").distinct().count()
+    assert(graft.hnsw.ShardRegistry.loads.get() - loads === shards)
+    assert(Hnsw.annQuery(base, q, k = 5).collect().nonEmpty)
+    assert(graft.hnsw.ShardRegistry.loads.get() - loads === shards)
+    // two queries whose probes reach two shards of one slot build each of
+    // them once, on a fresh index, and no other shard
+    val fresh = Hnsw.buildRouted(input, params.copy(numPartitions = 8), cellsPerShard = 4)
+    val slots = fresh.resident.graphs.slots
+    val cands = input.filter(col("id") % 10 === 3).select(col("id").as("qid"), col("vector"))
+    val pidOf = Hnsw.probedPidsFor(fresh, cands, probeCells = 1).collect().map(r => r.getLong(0) -> r.getInt(1))
+    val pair = pidOf.combinations(2).find(c => c(0)._2 != c(1)._2 && c(0)._2 % slots == c(1)._2 % slots)
+    assert(pair.nonEmpty, "no two queries probe two shards of one slot: premise broken")
+    val qs = cands.filter(col("qid").isin(pair.get.map(_._1): _*))
+    val before = graft.hnsw.ShardRegistry.loads.get()
+    assert(Hnsw.annQueryRouted(fresh, qs, k = 5, probeCells = 1).collect().nonEmpty)
+    assert(graft.hnsw.ShardRegistry.loads.get() - before === 2L)
   }
 
   test("routed probe of a quarter of the cells keeps >=0.9x the all-shard recall at lower cost") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SchedulerBridge
 
 import graft.functions.Distances
 import graft.hnsw.{Hnsw, HnswIndex, HnswParams, LocalHnsw, ShardRegistry}
@@ -16,6 +17,8 @@ class HnswSparkSpec extends SparkSpec {
   private lazy val params = HnswParams(dim = 64, m = 8, efConstruction = 64, numPartitions = 4)
 
   private lazy val index = Hnsw.build(input, params)
+  /** More shards than the suite's 4 cores: slots hold two shards each. */
+  private lazy val index8 = Hnsw.build(input, params.copy(numPartitions = 8))
 
   test("build produces edges on every populated layer and respects caps") {
     val perSrc = index.edges.groupBy("src", "layer").count().collect()
@@ -238,28 +241,40 @@ class HnswSparkSpec extends SparkSpec {
     val qs = queryArr(45)
     val qDf = qs.toSeq.toDF("qid", "vector")
     val ef = 24
+    val cores = SchedulerBridge.localCores(spark.sparkContext).get
     // a streaming-style append: a second sub-graph under pid P, with ids
     // disjoint from the base index
     val extra = Hnsw.build(input.filter(col("id") % 3 === 0)
       .select((col("id") + 1000000L).as("id"), col("vector")), params.copy(numPartitions = 1))
-    val appended = index.copy(
-      nodes = index.nodes.unionByName(extra.nodes.withColumn("pid", col("pid") + params.numPartitions)),
-      edges = index.edges.unionByName(extra.edges.withColumn("pid", col("pid") + params.numPartitions)))
-    val cases = Seq(
-      "plain" -> index,
-      "deleted" -> Hnsw.delete(index, qs.take(3).map(_._1).toSeq),
-      "merged" -> graft.hnsw.HnswMerge.merge(index, level0SampleMod = 4),
-      "appended" -> appended,
-      "filter view" -> Hnsw.withAllowed(index, input.filter(col("id") % 3 =!= 1).select("id")))
-    cases.foreach { case (name, idx) =>
-      val want = HnswSparkSpec.rebuildReference(idx, qs, k = 7, ef)
-      assert(want.nonEmpty, name)
-      assert(rowSet(Hnsw.annQuery(idx, qDf, k = 7, ef = ef)) === want, s"$name: annQuery")
-      assert(rowSet(Hnsw.annQueryBatch(idx, qs, k = 7, ef = ef)) === want, s"$name: annQueryBatch")
-      assert(rowSet(Hnsw.annQueryLarge(idx, qDf, k = 7, ef = ef)) === want, s"$name: annQueryLarge")
+    Seq(index, index8).foreach { base =>
+      val p = base.meta.num_partitions
+      assert(base.resident.graphs.slots === math.min(p, cores))
+      val appended = base.copy(
+        nodes = base.nodes.unionByName(extra.nodes.withColumn("pid", col("pid") + p)),
+        edges = base.edges.unionByName(extra.edges.withColumn("pid", col("pid") + p)))
+      val cases = Seq(
+        "plain" -> base,
+        "deleted" -> Hnsw.delete(base, qs.take(3).map(_._1).toSeq),
+        "merged" -> graft.hnsw.HnswMerge.merge(base, level0SampleMod = 4),
+        "appended" -> appended,
+        "filter view" -> Hnsw.withAllowed(base, input.filter(col("id") % 3 =!= 1).select("id")))
+      cases.foreach { case (name, idx) =>
+        val want = HnswSparkSpec.rebuildReference(idx, qs, k = 7, ef)
+        assert(want.nonEmpty, name)
+        assert(rowSet(Hnsw.annQuery(idx, qDf, k = 7, ef = ef)) === want, s"P=$p $name: annQuery")
+        assert(rowSet(Hnsw.annQueryBatch(idx, qs, k = 7, ef = ef)) === want, s"P=$p $name: annQueryBatch")
+        assert(rowSet(Hnsw.annQueryLarge(idx, qDf, k = 7, ef = ef)) === want, s"P=$p $name: annQueryLarge")
+      }
+      assert(HnswSparkSpec.rebuildReference(appended, qs, k = 7, ef).exists(_(2).asInstanceOf[Long] >= 1000000L),
+        s"P=$p: the appended shard must contribute results")
     }
-    assert(HnswSparkSpec.rebuildReference(appended, qs, k = 7, ef).exists(_(2).asInstanceOf[Long] >= 1000000L),
-      "the appended shard must contribute results")
+    assert(index8.meta.num_partitions > cores, "the P > cores case needs more shards than cores")
+  }
+
+  test("resident shards: a query's search and top-k merge plan has no Exchange") {
+    val plan = Hnsw.annQueryBatch(index8, queryArr(45), k = 5).queryExecution.executedPlan
+    assert(plan.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty, plan.toString)
+    assert(plan.toString.contains(s"Scan ${Hnsw.ShardSearchName}"), plan.toString)
   }
 
   test("resident shards: a delete after a query never returns the deleted ids; views return only allowed ids") {
@@ -286,47 +301,56 @@ class HnswSparkSpec extends SparkSpec {
   }
 
   test("resident shards: repeated single-query calls load each shard once and move only query rows") {
-    val idx = Hnsw.build(input, params)
-    val shards = idx.nodes.select("pid").distinct().count()
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("vector",
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
     val qs = queryArr(10).take(20)
     val sc = spark.sparkContext
-    val loadsBefore = ShardRegistry.loads.get()
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
-    val readBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        jobs.merge(g, 1, (a, b) => a + b)
-        js.stageIds.foreach(s => stageGroup.put(s, g))
-      }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          val g = stageGroup.getOrDefault(te.stageId, "")
-          readBytes.merge(g, m.shuffleReadMetrics.totalBytesRead, (a, b) => a + b)
+    Seq(params, params.copy(numPartitions = 8)).foreach { p =>
+      val idx = Hnsw.build(input, p)
+      val shards = idx.nodes.select("pid").distinct().count()
+      val slots = idx.resident.graphs.slots
+      assert(slots === math.min(p.numPartitions, SchedulerBridge.localCores(sc).get))
+      val loadsBefore = ShardRegistry.loads.get()
+      val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+      val tasks = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+      val stageGroup = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
+      val readBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val g = Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+          jobs.merge(g, 1, (a, b) => a + b)
+          js.stageIds.foreach(s => stageGroup.put(s, g))
         }
-    }
-    sc.addSparkListener(listener)
-    try {
-      qs.indices.foreach { i =>
-        sc.setJobGroup(s"resident-call-$i", "resident shard spec")
-        val one = spark.createDataFrame(java.util.List.of(
-          org.apache.spark.sql.Row(qs(i)._1, qs(i)._2)), schema)
-        val rows = Hnsw.annQuery(idx, one, k = 5).collect()
-        sc.clearJobGroup()
-        assert(rows.length === 5)
+        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+          val g = stageGroup.getOrDefault(te.stageId, "")
+          tasks.merge(g, 1, (a, b) => a + b)
+          Option(te.taskMetrics).foreach { m =>
+            readBytes.merge(g, m.shuffleReadMetrics.totalBytesRead, (a, b) => a + b)
+          }
+        }
       }
-      Thread.sleep(1000) // listener events are asynchronous
-    } finally sc.removeSparkListener(listener)
-    assert(ShardRegistry.loads.get() - loadsBefore === shards, "fromRows must run once per shard over all calls")
-    (1 until qs.length).foreach { i =>
-      val g = s"resident-call-$i"
-      assert(jobs.getOrDefault(g, 0) <= 3, s"call $i ran ${jobs.get(g)} jobs")
-      assert(readBytes.getOrDefault(g, 0L) < 100000L, s"call $i read ${readBytes.get(g)} shuffle bytes")
+      sc.addSparkListener(listener)
+      try {
+        qs.indices.foreach { i =>
+          sc.setJobGroup(s"resident-call-${p.numPartitions}-$i", "resident shard spec")
+          val one = spark.createDataFrame(java.util.List.of(
+            org.apache.spark.sql.Row(qs(i)._1, qs(i)._2)), schema)
+          val rows = Hnsw.annQuery(idx, one, k = 5).collect()
+          sc.clearJobGroup()
+          assert(rows.length === 5)
+        }
+        Thread.sleep(1000) // listener events are asynchronous
+      } finally sc.removeSparkListener(listener)
+      assert(ShardRegistry.loads.get() - loadsBefore === shards, "fromRows must run once per shard over all calls")
+      (1 until qs.length).foreach { i =>
+        val g = s"resident-call-${p.numPartitions}-$i"
+        assert(jobs.getOrDefault(g, 0) === 1, s"P=${p.numPartitions} call $i ran ${jobs.get(g)} jobs")
+        assert(tasks.getOrDefault(g, 0) <= slots + 1,
+          s"P=${p.numPartitions} call $i ran ${tasks.get(g)} tasks for $slots slots and one query")
+        assert(readBytes.getOrDefault(g, 0L) < 100000L, s"call $i read ${readBytes.get(g)} shuffle bytes")
+      }
     }
   }
 

@@ -89,6 +89,29 @@ class PipelinePrepSpec extends SparkSpec {
     assert(unk.contains(-1L), s"'#' must encode as unk, got $unk")
   }
 
+  test("bpeEncodeIds: the default vocabulary assigns the same ids as the explicit bpeVocab path") {
+    // supplementary-plane symbols (UTF-16 surrogate pairs) sort after
+    // U+FB00 in UTF-8 byte order but before it in UTF-16 order, and
+    // "abc" is derived twice ("ab"+"c", then "a"+"bc")
+    val docs = Seq(
+      (0L, "abc a\uD835\uDC9C \uFB00c"), (1L, "bc abc \uD83D\uDE00a"),
+      (2L, "\uD835\uDC9C\uD835\uDC9C ab \uD83D\uDE00ab"), (3L, "cab \uFB00 zz")
+    ).toDF("doc_id", "text")
+    val merges = Seq("a b" -> "ab", "ab c" -> "abc", "b c" -> "bc", "a bc" -> "abc",
+      "\uD83D\uDE00 a" -> "\uD83D\uDE00a", "\uD835\uDC9C \uD835\uDC9C" -> "\uD835\uDC9C\uD835\uDC9C")
+    val vocab = TextStats.bpeVocab(docs, "text", merges)
+    val explicit = TextStats.bpeEncodeIds(docs, "doc_id", "text", merges, vocab)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val default = TextStats.bpeEncodeIds(docs, "doc_id", "text", merges)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(default === explicit)
+    assert(explicit.keySet === (0L to 3L).toSet)
+    assert(explicit.values.forall(_.forall(_ >= 0)), "in-corpus encode has no unk ids")
+    val vocabMap = vocab.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(vocabMap.contains("\uD835\uDC9C") && vocabMap("\uFB00") < vocabMap("\uD835\uDC9C"),
+      "base ids follow UTF-8 byte order")
+  }
+
   test("sequenceStats: every sequence meets the budget before overshooting by at most one doc") {
     val docs = (0L until 100L)
       .map(i => (i, Seq.fill((i % 13 + 1).toInt)("w").mkString(" ")))

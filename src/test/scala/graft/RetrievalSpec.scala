@@ -113,6 +113,39 @@ class RetrievalSpec extends SparkSpec {
     assert(got(0)._4 > got(1)._4)
   }
 
+  test("lmDocScores: the bigram stream spreads a Zipfian head bigram over (id, bigram) partitions, same scores") {
+    // every document repeats the head bigram "of the", and a few share tails
+    val rng = new scala.util.Random(5)
+    val words = Seq("alpha", "beta", "gamma", "delta", "eps")
+    val corpus = (0L until 60L).map { id =>
+      val tail = Seq.fill(3 + (id % 4).toInt)(words(rng.nextInt(words.size)))
+      id -> (Seq.fill(5)("of the") ++ tail).mkString(" ")
+    }
+    val docs = corpus.toDF("doc_id", "text")
+    val parts = Retrieval.lmDocScores(docs, "doc_id", "text", materialize = false).queryExecution.optimizedPlan
+      .collect { case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+        r.partitionExpressions.flatMap(_.references.map(_.name)).toSet
+      }
+    // the un-materialized stream feeds three consumers, each its own copy
+    assert(parts.nonEmpty && parts.forall(_ == Set("doc_id", "bigram")), s"bigram stream partitioning: $parts")
+    // reference: the unsmoothed bigram LM scored scalar-side
+    val bigrams = corpus.map { case (id, t) => id -> t.split(" ").sliding(2).map(_.mkString(" ")).toSeq }
+    val nPair = bigrams.flatMap(_._2).groupBy(identity).map { case (b, bs) => b -> bs.size.toLong }
+    val nFirst = nPair.toSeq.groupBy(_._1.split(" ")(0)).map { case (w, ps) => w -> ps.map(_._2).sum }
+    val lp = nPair.map { case (b, n) =>
+      b -> math.floor(math.log(n.toDouble / nFirst(b.split(" ")(0)).toDouble) * 1e6 + 0.5).toLong
+    }
+    val want = bigrams.map { case (id, bs) =>
+      val total = bs.map(lp).sum
+      (id, bs.size.toLong, total, (total.toDouble / 1e6) / bs.size.toDouble)
+    }.toSet
+    Seq(true, false).foreach { materialize =>
+      val got = Retrieval.lmDocScores(docs, "doc_id", "text", materialize)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+      assert(got === want, s"materialize = $materialize")
+    }
+  }
+
   test("lmScoreAgainst: frozen LM scores held-out text; unseen bigrams take the floor penalty") {
     // LM trained on a tiny corpus where P(b|a)=3/4, P(c|a)=1/4
     val trainDocs = Seq((0L, "a b a b"), (1L, "a b a c")).toDF("doc_id", "text")
