@@ -1,7 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle helper for eager `localCheckpoint()` materializations.
   *
@@ -17,6 +22,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * A localCheckpoint has no lineage to recompute from: only unpersist a
   * frame once nothing returned to the caller can reference it.
+  *
+  * [[boundary]] is the lineage-keeping form for pipeline stage
+  * boundaries: the same flat one-leaf plan, but a released or lost block
+  * recomputes instead of failing.
   */
 private[graft] object Checkpoints {
 
@@ -74,6 +83,61 @@ private[graft] object Checkpoints {
     val c = ds.localCheckpoint()
     if (pinnedDepth.get == 0) rddId(c).foreach(id => trackedIds.add(id))
     c
+  }
+
+  /** Stage boundary: runs `df` once, as the SQL action `name`, into an RDD
+    * persisted MEMORY_AND_DISK, and returns a frame over that RDD whose
+    * plan is a single `LogicalRDD` leaf. Consumers analyze and plan a
+    * constant-size tree however many boundaries sit upstream.
+    *
+    * The leaf carries the row count and size (UnsafeRow bytes) measured
+    * from the materialized rows, so downstream joins plan as broadcast or
+    * shuffled by what the stage really produced; without them the leaf
+    * would report `spark.sql.defaultSizeInBytes` and every join against
+    * it would shuffle.
+    *
+    * Unlike [[tracked]]'s localCheckpoint, lineage is kept: a lost or
+    * released block recomputes from `df`'s plan. Nothing registers with
+    * the CacheManager. The RDD (named `boundary: <name>`) is registered
+    * for [[releaseTracked]] unless created under [[pinned]]; releasing a
+    * boundary that a live frame still reads costs a recompute, not a
+    * failure, unless that recompute has to reach a released or lost
+    * localCheckpoint in `df`'s lineage.
+    */
+  def boundary(df: DataFrame, name: String): DataFrame = {
+    val fallbackRowBytes = df.schema.defaultSize.toLong
+    val (rows, counts) = PlanBridge.withAction(df, name) { plan =>
+      val rows = plan.execute().map(_.copy())
+        .setName(BoundaryPrefix + name).persist(StorageLevel.MEMORY_AND_DISK)
+      val counts = df.sparkSession.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+        var n, bytes = 0L
+        it.foreach { r =>
+          n += 1
+          bytes += (r match {
+            case u: UnsafeRow => u.getSizeInBytes.toLong
+            case _            => fallbackRowBytes
+          })
+        }
+        (n, bytes)
+      })
+      (rows, counts)
+    }
+    if (pinnedDepth.get == 0) trackedIds.add(rows.id)
+    PlanBridge.rddLeaf(df, rows, Statistics(sizeInBytes = BigInt(counts.map(_._2).sum),
+      rowCount = Some(BigInt(counts.map(_._1).sum))))
+  }
+
+  /** Name prefix of every [[boundary]] RDD. */
+  val BoundaryPrefix = "boundary: "
+
+  /** Row count a [[boundary]] frame measured when it materialized; None
+    * for any other frame (a localCheckpoint leaf's row count, if it has
+    * one, is the optimizer's estimate).
+    */
+  def boundaryRows(df: Dataset[_]): Option[Long] = df.queryExecution.analyzed match {
+    case l: LogicalRDD if Option(l.rdd.name).exists(_.startsWith(BoundaryPrefix)) =>
+      l.stats.rowCount.map(_.toLong)
+    case _ => None
   }
 
   /** Unpersist every tracked checkpoint still persisted, then forget them.

@@ -47,25 +47,21 @@ object Pipeline {
     * (idCol, sourceCol, textCol, n_tok, bin, tier, shard, ck).
     *
     * `materialize` (default true) materializes each stage boundary
-    * (gated, deduped, clean): every stage's operator consumes its input
-    * MORE THAN ONCE (exactDedup's groupBy + join-back, the decontam
-    * anti-join, tokenBudgetSelect's verdict join all read their input
-    * twice), so an unmaterialized composition re-derives the whole
-    * upstream chain per consumer — multiplicatively. At 100 TB each
-    * re-derivation is a full corpus re-read; materialized, the corpus is
-    * scanned once per stage. Pass false for a fully-lazy plan (EXPLAIN
-    * without jobs).
-    *
-    * `stageStorage` picks HOW boundaries materialize:
-    *   - `"persist"` (default): `persist(MEMORY_AND_DISK)` — lineage is
-    *     KEPT, so on a real cluster a lost executor mid-prepare recomputes
-    *     its blocks instead of failing the whole long-running job, and
-    *     plan construction stays lazy (no jobs until an action);
-    *   - `"local-checkpoint"`: eager `localCheckpoint()` — truncates
-    *     lineage (flat plans for the iterative single-node proofs) at the
-    *     cost of unrecoverable blocks on executor loss.
-    * Blocks are cached for the result plan's lifetime; release them with
-    * `Checkpoints.unpersist` tree-walks when the result is consumed.
+    * (gated, deduped, near-deduped, clean) with [[Checkpoints.boundary]]:
+    * every stage's operator consumes its input MORE THAN ONCE
+    * (exactDedup's groupBy + join-back, the decontam anti-join,
+    * tokenBudgetSelect's verdict join all read their input twice), so an
+    * unmaterialized composition re-derives the whole upstream chain per
+    * consumer — multiplicatively. At 100 TB each re-derivation is a full
+    * corpus re-read; materialized, the corpus is scanned once per stage.
+    * Each boundary runs its job when `prepare` builds it, as the
+    * near-dedup operators inside already do, and the next stage plans
+    * against a one-leaf plan carrying the measured stage size, so plan
+    * size stays constant in the number of stages. Boundaries keep their
+    * lineage (a lost executor recomputes its blocks instead of failing a
+    * long prepare) and are freed by [[Checkpoints.releaseTracked]] once
+    * the result is consumed. Pass false for a fully-lazy plan (EXPLAIN
+    * without the boundary jobs).
     */
   def prepare(docs: DataFrame,
               idCol: String, sourceCol: String, textCol: String,
@@ -79,24 +75,19 @@ object Pipeline {
               nearMaxBand: Int = 1000,
               decontamN: Int = 3,
               decontamMinOverlap: Int = 5,
-              materialize: Boolean = true,
-              stageStorage: String = "persist"): DataFrame = {
-    require(stageStorage == "persist" || stageStorage == "local-checkpoint",
-      s"stageStorage must be 'persist' or 'local-checkpoint', got '$stageStorage'")
-    def ckpt(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else if (stageStorage == "local-checkpoint") Checkpoints.tracked(df)
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              materialize: Boolean = true): DataFrame = {
+    def ckpt(df: DataFrame, stage: String): DataFrame =
+      if (materialize) Checkpoints.boundary(df, s"prepare: $stage") else df
     // stage 1: quality gate (Gopher keep AND composite score)
     val gated = ckpt(docs
       .join(TextStats.gopherRulesHof(docs, idCol, textCol)
         .filter(col("keep")).select(idCol), idCol)
-      .filter(TextFunctions.qualityScore(col(textCol)) >= minQuality))
+      .filter(TextFunctions.qualityScore(col(textCol)) >= minQuality), "gate")
 
     // stage 2: exact dedup — canonical rows only
     val deduped = ckpt(gated.join(
       Dedup.exactDedup(gated, idCol, textCol)
-        .filter(!col("is_dup")).select(idCol), idCol))
+        .filter(!col("is_dup")).select(idCol), idCol), "exact dedup")
 
     // stage 2.5 (optional): NEAR dedup — MinHash+LSH propose, exact
     // Jaccard verify at `minJaccard`, connected components, keep the
@@ -112,7 +103,7 @@ object Pipeline {
         val drop = Dedup.dupClusters(deduped, dupPairs, idCol)
           .filter(col(idCol) =!= col("comp")) // comp = min id = the canonical
           .select(idCol)
-        ckpt(deduped.join(drop, Seq(idCol), "left_anti"))
+        ckpt(deduped.join(drop, Seq(idCol), "left_anti"), "near dedup")
       case None => deduped // already a stage boundary
     }
 
@@ -121,7 +112,7 @@ object Pipeline {
       case Some(b) =>
         ckpt(nearDeduped.join(Dedup.contamination(nearDeduped, b, idCol, textCol,
           n = decontamN, minOverlap = decontamMinOverlap)
-          .select(idCol), Seq(idCol), "left_anti"))
+          .select(idCol), Seq(idCol), "left_anti"), "decontam")
       case None => nearDeduped // already a stage boundary
     }
 
@@ -187,9 +178,10 @@ object Pipeline {
   /** END-TO-END crawl-to-shards: parsed WARC records through
     * [[docsFromWarc]] (strip + URL dedup) and then the full [[prepare]]
     * stage chain — the one composition a user points at a crawl. The
-    * canonical-fetch table is materialized once (`stageStorage`, see
-    * [[prepare]]): every prepare stage re-reads it instead of re-parsing
-    * the WARC bytes per stage. Output = [[prepare]]'s columns + `url`.
+    * canonical-fetch table is materialized once, as a
+    * [[Checkpoints.boundary]] like [[prepare]]'s stages: every prepare
+    * stage re-reads it instead of re-parsing the WARC bytes per stage.
+    * Output = [[prepare]]'s columns + `url`.
     *
     * `verifyIds` (default true) guards the xxhash64(url) → doc_id key: at
     * real crawl scale (billions of URLs) a 64-bit collision is no longer
@@ -198,8 +190,7 @@ object Pipeline {
     * rows at the url join-back. The check is one partial-agg count over
     * the already-materialized doc table (groupBy doc_id, any url-distinct
     * group > 1 → loud IllegalStateException naming a colliding pair) —
-    * cheap next to the decode it rides behind. Pass false to keep plan
-    * construction fully job-free (EXPLAIN).
+    * cheap next to the decode it rides behind.
     */
   def prepareFromWarc(records: DataFrame,
                       minQuality: Double = 0.3,
@@ -212,13 +203,10 @@ object Pipeline {
                       nearMaxBand: Int = 1000,
                       decontamN: Int = 3,
                       decontamMinOverlap: Int = 5,
-                      stageStorage: String = "persist",
                       verifyIds: Boolean = true,
                       canonicalizeUrls: Boolean = false): DataFrame = {
-    val raw = docsFromWarc(records, canonicalizeUrls = canonicalizeUrls)
-    val docs =
-      if (stageStorage == "local-checkpoint") Checkpoints.tracked(raw)
-      else raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = Checkpoints.boundary(docsFromWarc(records, canonicalizeUrls = canonicalizeUrls),
+      "prepareFromWarc: canonical fetches")
     if (verifyIds) {
       val clash = docs.groupBy(col("doc_id"))
         .agg(countDistinct(col("url")).as("n_urls"), min(col("url")).as("u1"),
@@ -235,7 +223,7 @@ object Pipeline {
       minQuality = minQuality, bench = bench, quota = quota, bins = bins,
       numShards = numShards, bestLast = bestLast, nearDedup = nearDedup,
       nearMaxBand = nearMaxBand, decontamN = decontamN,
-      decontamMinOverlap = decontamMinOverlap, stageStorage = stageStorage)
+      decontamMinOverlap = decontamMinOverlap)
       .join(docs.select("doc_id", "url"), "doc_id")
   }
 
@@ -324,15 +312,17 @@ object Pipeline {
   def writeCurriculum(prepared: DataFrame, outDir: String, idCol: String,
                       recordsPerFile: Int): Int = {
     require(recordsPerFile > 0, "recordsPerFile must be positive")
-    // materialize ONCE: the incoming plan is the whole multi-stage
-    // prepare DAG, and the count + write below would otherwise execute
-    // it twice. persist (NOT localCheckpoint): lineage survives, so a
-    // lost executor during the write recomputes its partitions instead
-    // of failing the run. Skip when the caller already materialized.
+    // materialize ONCE: the incoming plan is the prepare tail over its
+    // last stage boundary, and the row count + write below would
+    // otherwise execute it twice. A boundary (NOT localCheckpoint):
+    // lineage survives, so a lost executor during the write recomputes
+    // its partitions instead of failing the run, and the materializing
+    // job's row count stands in for a separate count(). Skip when the
+    // caller already materialized.
     val alreadyMaterialized = Checkpoints.rddId(prepared).isDefined
     val p = if (alreadyMaterialized) prepared
-      else prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = p.count()
+      else Checkpoints.boundary(prepared, "writeCurriculum: input")
+    val n = Checkpoints.boundaryRows(p).getOrElse(p.count())
     val parts = math.max(1, math.ceil(n.toDouble / recordsPerFile).toInt)
     p
       .repartitionByRange(parts, col("ck"), col("h"), col(idCol))
@@ -340,7 +330,7 @@ object Pipeline {
       .write.mode("overwrite")
       .option("maxRecordsPerFile", recordsPerFile.toLong)
       .parquet(outDir)
-    if (!alreadyMaterialized) p.unpersist(blocking = false)
+    if (!alreadyMaterialized) Checkpoints.unpersist(p)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(outDir), prepared.sparkSession.sparkContext.hadoopConfiguration)
     fs.listStatus(new org.apache.hadoop.fs.Path(outDir))

@@ -161,6 +161,27 @@ class CheckpointsSpec extends SparkSpec {
     Checkpoints.unpersist(p)
   }
 
+  test("boundary: one-leaf plan with measured rows and size, tracked for release") {
+    val src = (0L until 1000L).toDF("id").withColumn("k", col("id") % 7)
+    val b = Checkpoints.boundary(src.groupBy("k").agg(count(lit(1)).as("n")), "spec")
+    assert(b.queryExecution.analyzed.children.isEmpty, "the boundary plan must be a single leaf")
+    assert(Checkpoints.boundaryRows(b) === Some(7L))
+    assert(Checkpoints.boundaryRows(src.localCheckpoint()).isEmpty,
+      "only boundary leaves report a measured row count")
+    val stats = b.queryExecution.analyzed.stats
+    assert(stats.sizeInBytes > 0 && stats.sizeInBytes < 1024, s"measured size ${stats.sizeInBytes}")
+    // the measured size lets the planner broadcast the small side; a leaf
+    // without it reports spark.sql.defaultSizeInBytes and sort-merges
+    val joined = src.join(b, "k")
+    assert(joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+      joined.queryExecution.executedPlan.toString)
+    assert(joined.count() === 1000L)
+    val id = Checkpoints.rddId(b).get
+    Checkpoints.releaseTracked(spark)
+    assert(awaitReleased(Set(id)).isEmpty, "a boundary must be released by releaseTracked")
+    assert(b.count() === 7L, "a released boundary recomputes from its lineage")
+  }
+
   test("durable spillPath: pqFit cleans superseded codebook iterations and the slice table") {
     import graft.operators.Pq
     import spark.implicits._

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Pipeline
+import graft.operators.{Checkpoints, Pipeline}
 
 /** End-to-end corpus prep: each stage's effect on a planted corpus, the
   * curriculum key contract, and the ordered-shard export.
@@ -67,13 +68,14 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  // doc 10 = doc 0 with one token swapped: survives EXACT dedup but is a
+  // near dup (high 3-gram Jaccard); chain 10-11 must collapse too
+  private def nearCorpus = corpus.unionAll(Seq(
+    (10L, "web", goodDoc(0).replace("tok1 ", "swap ")),
+    (11L, "web", goodDoc(0).replace("tok2 ", "swap2 "))).toDF("doc_id", "source", "text"))
+
   test("prepare with nearDedup: near-identical docs collapse to the min-id canonical") {
-    // doc 10 = doc 0 with one token swapped: survives EXACT dedup but is
-    // a near dup (high 3-gram Jaccard); chain 10-11 must collapse too
-    val near1 = goodDoc(0).replace("tok1 ", "swap ")
-    val near2 = goodDoc(0).replace("tok2 ", "swap2 ")
-    val docs = corpus.unionAll(Seq(
-      (10L, "web", near1), (11L, "web", near2)).toDF("doc_id", "source", "text"))
+    val docs = nearCorpus
     val without = Pipeline.prepare(docs, "doc_id", "source", "text", numShards = 4)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(without.contains(10L) && without.contains(11L),
@@ -85,6 +87,61 @@ class PipelineSpec extends SparkSpec {
     assert(ids.contains(0L), "the min-id canonical survives")
     assert(ids.contains(3L) && ids.contains(4L) && ids.contains(6L),
       "unrelated docs are untouched")
+  }
+
+  /** Every stage with a boundary: gate, exact dedup, near dedup, decontam. */
+  private def fullPrepare(materialize: Boolean = true): DataFrame =
+    Pipeline.prepare(nearCorpus, "doc_id", "source", "text", bench = Some(bench),
+      numShards = 4, nearDedup = Some(0.6), materialize = materialize)
+
+  private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+
+  /** Ids of the stage-boundary RDDs persisted now and not in `before`. */
+  private def newBoundaries(before: collection.Set[Int]): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.collect {
+      case (id, rdd) if !before.contains(id) &&
+        Option(rdd.name).exists(_.startsWith(Checkpoints.BoundaryPrefix)) => id
+    }.toSet
+
+  test("prepare: materialized stage boundaries give the rows of the fully lazy plan") {
+    val eager = sortedRows(fullPrepare())
+    assert(eager.map(_.head) === Seq(0L, 3L, 4L, 6L))
+    assert(eager === sortedRows(fullPrepare(materialize = false)))
+  }
+
+  test("prepare: the result's analyzed plan does not grow with the number of stages") {
+    def nodes(df: DataFrame): Int = df.queryExecution.analyzed.collect { case n => n }.size
+    val all = nodes(fullPrepare())
+    val fewest = nodes(Pipeline.prepare(corpus, "doc_id", "source", "text", numShards = 4))
+    // each boundary is one leaf, so only the budget + curriculum tail
+    // after the last one remains; a lineage-keeping frame instead grows
+    // with every self-joining stage (1,855 nodes with all four)
+    assert(all === fewest, "two extra stages must not add plan nodes")
+    assert(all < 100, s"analyzed plan has $all nodes")
+  }
+
+  test("prepare: stage boundaries recompute from lineage after their blocks are released") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = fullPrepare()
+    val boundaries = newBoundaries(before)
+    assert(boundaries.size === 4, "gate, exact dedup, near dedup and decontam boundaries")
+    val first = sortedRows(out)
+    boundaries.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
+    assert(newBoundaries(before).isEmpty)
+    // a localCheckpoint boundary would fail here: its blocks cannot recompute
+    assert(sortedRows(out) === first)
+  }
+
+  test("prepare: releaseTracked frees every stage boundary of a consumed result") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = fullPrepare()
+    val boundaries = newBoundaries(before)
+    assert(boundaries.size === 4)
+    out.collect()
+    Checkpoints.releaseTracked(spark)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.intersect(boundaries).isEmpty,
+      "releaseTracked must unpersist the boundaries")
   }
 
   test("--prepare CLI round-trip: shards land with curriculum columns") {

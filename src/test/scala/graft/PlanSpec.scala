@@ -178,24 +178,28 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q116 prepare: stage boundaries materialized — final plan reads no parquet") {
-    // every prepare stage consumes its input twice; the boundaries are
-    // persist(MEMORY_AND_DISK) (lineage-keeping — a lost executor
-    // recomputes instead of failing the run), so the OPTIMIZED plan's own
-    // tree must read InMemoryRelations, with parquet scans living only
-    // inside the cached subtrees (computed once at cache fill, never
-    // multiplicatively). Formatted text can't distinguish inside/outside a
-    // cached subtree, so this guard walks the logical plan objects.
+    // every prepare stage consumes its input twice; each boundary is a
+    // Checkpoints.boundary (materialized once, lineage-keeping — a lost
+    // executor recomputes instead of failing the run), so the OPTIMIZED
+    // plan must read boundary leaves, never re-derive parquet subtrees,
+    // and hold no CacheManager entry. Formatted text can't tell a
+    // boundary leaf from another RDD scan, so this guard walks the
+    // logical plan objects.
     val lp = SparkEntry.queries("q116_prepare")(spark, "/root/testdata/sf0.001")
       .queryExecution.optimizedPlan
     val raw = lp.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
     }
     assert(raw.isEmpty,
-      "q116 final plan must read stage-boundary caches, not re-derive parquet subtrees")
-    val cached = lp.collect {
-      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
+      "q116 final plan must read stage-boundary leaves, not re-derive parquet subtrees")
+    val boundaries = lp.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD
+        if Option(l.rdd.name).exists(_.startsWith(graft.operators.Checkpoints.BoundaryPrefix)) => l
     }
-    assert(cached.nonEmpty, "stage boundaries must appear as InMemoryRelations")
+    assert(boundaries.nonEmpty, "stage boundaries must appear as boundary LogicalRDD leaves")
+    assert(lp.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
+    }.isEmpty, "stage boundaries must not be CacheManager entries")
     assert(!formatted("q116_prepare").contains("CartesianProduct"))
   }
 
