@@ -29,6 +29,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // traversal instead of a full scan (post-hoc resolution: needs the view
     // name, which the optimizer erases)
     ext.injectPostHocResolutionRule(session => graft.plans.AnnTopKRewrite(session))
+    // plans the `Scan HnswShardSearch` leaf of the broadcast ANN paths
+    ext.injectPlannerStrategy(_ => graft.hnsw.HnswShardSearchStrategy)
     GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }
@@ -135,8 +137,11 @@ object GraftExtensions {
     * fixed at session construction; this is the escape hatch for e.g. the
     * driver's Verify session). Same builders as the extension path —
     * identical expression trees. Idempotent: re-registration replaces the
-    * same entry. Does NOT install the ANN plan rewrite (a resolution rule
-    * cannot be added post-construction) — pure scalar/aggregate surface.
+    * same entry. Registers functions only. The extension path also
+    * installs the ANN plan rewrite, which cannot be added to a built
+    * session (a resolution rule), and the `HnswShardSearch` planner
+    * strategy, which the ANN query paths add to their index's session on
+    * first use instead (`HnswShardSearchStrategy.setup`).
     */
   def registerInto(session: SparkSession): Unit =
     functions.foreach { case (id, inf, builder) =>

@@ -11,7 +11,7 @@ import graft.hnsw.LocalHnsw
   * `buildFromPid`'s mapPartitions does, min-of-reps.
   *
   * Run: scripts/run_main.sh graft.LocalBuildBench [n=16000] [dim=512]
-  *        [metric=cosine] [reps=3] [screen=off]
+  *        [metric=cosine] [reps=3]
   */
 object LocalBuildBench {
   def main(args: Array[String]): Unit = {
@@ -19,7 +19,6 @@ object LocalBuildBench {
     val dim = args.lift(1).map(_.toInt).getOrElse(512)
     val metric = args.lift(2).getOrElse("cosine")
     val reps = args.lift(3).map(_.toInt).getOrElse(3)
-    val screen = args.lift(4).contains("screen") || args.lift(4).contains("on")
     val m = 12
     val efc = 100
     // deterministic per-id vectors (the hashVectors recipe, locally):
@@ -43,24 +42,18 @@ object LocalBuildBench {
     val levels = Array.tabulate(n)(i => graft.functions.Levels.levelForLocal(i.toLong, mL))
     var best = Double.MaxValue
     var edges = 0L
-    var screenEvals = 0L
-    var screenSkips = 0L
     (1 to reps).foreach { rep =>
-      val idx = new LocalHnsw(dim, m, 2 * m, efc, metric, int8Screen = screen)
+      val idx = new LocalHnsw(dim, m, 2 * m, efc, metric)
       val t0 = System.nanoTime()
       var i = 0
       while (i < n) { idx.add(i.toLong, vecs(i), levels(i)); i += 1 }
       val sec = (System.nanoTime() - t0) / 1e9
       edges = idx.edges.size.toLong
-      screenEvals = idx.screenEvals
-      screenSkips = idx.screenSkips
-      val rate = if (screenEvals > 0) f" screen ${100.0 * screenSkips / screenEvals}%.1f%%" else ""
       System.err.println(f"[local-build] rep $rep: $sec%.2f s " +
-        f"(${n / sec}%.0f inserts/s, ${sec * 1e6 / n}%.1f us/insert)$rate")
+        f"(${n / sec}%.0f inserts/s, ${sec * 1e6 / n}%.1f us/insert)")
       if (sec < best) best = sec
     }
     println(f"""{"n":$n,"dim":$dim,"metric":"$metric","m":$m,"ef_construction":$efc,""" +
-      f""""screen":$screen,"screen_evals":$screenEvals,"screen_skips":$screenSkips,""" +
       f""""best_sec":$best%.3f,"inserts_per_sec":${n / best}%.1f,"edges":$edges}""")
   }
 }

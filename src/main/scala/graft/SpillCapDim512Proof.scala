@@ -68,12 +68,8 @@ object SpillCapDim512Proof {
     import spark.implicits._
 
     val p = 64
-    // SPARK_GRAFT_INT8SCREEN=1 builds with the int8 candidate pre-screen
-    // (bit-identical graphs — LocalHnswSpec pins it — so A/B runs of this
-    // proof isolate the screen's pure bandwidth effect on the graph phase)
-    val screen = sys.env.get("SPARK_GRAFT_INT8SCREEN").exists(v => v == "1" || v == "true")
     val params = HnswParams(dim = dim, m = 12, efConstruction = 100,
-      metric = "cosine", numPartitions = p, int8Screen = screen)
+      metric = "cosine", numPartitions = p)
     val input =
       if (corpus == "clustered") graft.sources.Datagen.clusteredVectors(spark, n, dim)
       else graft.sources.Datagen.hashVectors(spark, n, dim)
@@ -120,7 +116,7 @@ object SpillCapDim512Proof {
       } else fullRow(spark, index, cap, buildSec, loadSec, nodeRows, ghostShare, c, n)
     }
     println(s"""{"n":$n,"dim":$dim,"num_partitions":$p,"corpus":"$corpus","mode":"$mode",""" +
-      s""""int8_screen":$screen,"builds":${rows.mkString("[", ",", "]")}}""")
+      s""""builds":${rows.mkString("[", ",", "]")}}""")
     spark.stop()
   }
 

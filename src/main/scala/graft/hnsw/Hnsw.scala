@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Distances, Levels}
@@ -27,13 +28,7 @@ case class HnswParams(
     efSearch: Int = 50,
     mL: Double = Double.NaN,
     metric: String = "l2",
-    numPartitions: Int = 16,
-    // int8 candidate pre-screen in the build's searchLayer — BIT-IDENTICAL
-    // graphs by a certified quantization bound (LocalHnsw scaladoc;
-    // identity spec-pinned), so this is purely a bandwidth lever for the
-    // DRAM-bound 32-way graph phase. Cosine only (no-op elsewhere).
-    // Default follows the measurements in BENCH_SCALE_BUILDPHASES512.json.
-    int8Screen: Boolean = false) {
+    numPartitions: Int = 16) {
   def maxM0Resolved: Int = if (maxM0 > 0) maxM0 else 2 * m
   def mLResolved: Double = if (mL.isNaN) Levels.defaultML(m) else mL
   require(Distances.metrics.contains(metric), s"unknown metric '$metric'")
@@ -569,7 +564,7 @@ object Hnsw {
       .groupByKey(_.pid)
       .flatMapSortedGroups(col("id")) { (pid, rows) =>
         val idx = new LocalHnsw(params.dim, params.m, params.maxM0Resolved,
-          params.efConstruction, params.metric, params.int8Screen)
+          params.efConstruction, params.metric)
         rows.foreach(r => idx.add(r.id, r.vector, r.level))
         idx.edges.map { case (src, layer, dst) => EdgeRow(pid, src, layer, dst) }
       }
@@ -965,12 +960,13 @@ object Hnsw {
     * durable-parquet form. Driver memory never holds more than one chunk
     * either way (SURVEY.md §3.1). Each shard slot's task searches the
     * index's resident sub-graphs ([[HnswIndex.resident]]: built by the
-    * first query over the index's tables, then kept on the executors), and
-    * the per-query top-k merge runs inside the same RDD, so a call is one
-    * Spark job of one search task per slot ([[ResidentShards.slots]]:
-    * `min(P, cores)` in local mode, P on a cluster) plus `min(q, slots)`
-    * merge tasks that moves only k candidates per query and slot. Tombstones
-    * are skipped during traversal (not by widening
+    * first query over the index's tables, then kept on the executors) and
+    * returns k candidates per query, which the driver merges into each
+    * query's top-k ([[ChunkSearch]]), so a call is one single-stage Spark
+    * job of one task per slot ([[ResidentShards.slots]]: `min(P, cores)`
+    * in local mode, P on a cluster), run when the returned frame's plan
+    * executes. An in-memory query frame is read from its plan, without a
+    * job. Tombstones are skipped during traversal (not by widening
     * ef) — search cost is independent of the total delete count.
     * Output: (qid, rank, id, dist).
     *
@@ -997,16 +993,26 @@ object Hnsw {
     // small limit) needs no decision. Any other frame is decided by a
     // bounded collect of qids only: it never pulls a vector chunk just to
     // drop it.
-    val oneChunk = queries.queryExecution.optimizedPlan.maxRows.exists(_ <= queryBatchSize)
+    val cast = queries.select(col("qid").cast("long"), col("vector").cast("array<float>"))
+    val plan = cast.queryExecution.optimizedPlan
+    val oneChunk = plan.maxRows.exists(_ <= queryBatchSize)
     if (spillPath.isEmpty && !oneChunk &&
         queries.select(col("qid")).limit(queryBatchSize + 1).collect().length > queryBatchSize) {
       largeDispatches.incrementAndGet()
       return annQueryLarge(index, queries, k, ef)
     }
-    val rows = queries.select(col("qid").cast("long"), col("vector").cast("array<float>"))
-      .as[(Long, Array[Float])]
+    val rows = cast.as[(Long, Array[Float])]
     spillPath match {
-      case None => broadcastSearch(index, rows.collect(), k, ef)._1 // one chunk: fully lazy
+      case None =>
+        // an in-memory query frame is read from its plan, without a job
+        val qArr = plan match {
+          case local: LocalRelation => local.data.iterator.map { r =>
+            require(!r.isNullAt(0), "annQuery: qid must not be null")
+            (r.getLong(0), if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())
+          }.toArray
+          case _ => rows.collect()
+        }
+        broadcastSearch(index, qArr, k, ef)._1 // one chunk: fully lazy
       case Some(path) =>
         // durable parquet appends, one chunk at a time: each chunk is
         // searched eagerly and its broadcast destroyed before the next is
@@ -2219,7 +2225,8 @@ object Hnsw {
     * sort of the q·k·P candidate set. Deterministic (dist asc, id asc),
     * bit-identical to the window form (equivalence spec-tested for Knn).
     * The exact and PQ tiers merge with it; the graph-search paths merge
-    * the same way inside their search RDD ([[ShardSearchRDD.ranked]]).
+    * the same way inside their search RDD ([[ShardSearchRDD.ranked]]) or,
+    * for a broadcast chunk, on the driver ([[ChunkSearch]]).
     */
   private def rankTopK(perPart: DataFrame, k: Int): DataFrame =
     perPart.groupBy(col("qid"))
@@ -2232,19 +2239,17 @@ object Hnsw {
         col("entry.id").as("id"), col("entry.dist").as("dist"))
 
   /** Resident sub-graph search for one broadcast chunk: every shard
-    * searches every query, and each query's top-k is merged in
-    * `min(q, slots)` partitions of the same RDD. Output: (qid, rank, id,
-    * dist) and the chunk's broadcast.
+    * searches every query, and the driver merges each query's top-k
+    * ([[ChunkSearch]]) under a lazy `Scan HnswShardSearch` leaf. Output:
+    * (qid, rank, id, dist) and the chunk's broadcast.
     */
   private def broadcastSearch(index: HnswIndex, qArr: Array[(Long, Array[Float])], k: Int, ef: Int):
       (DataFrame, org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]]) = {
     val spark = index.nodes.sparkSession
-    import spark.implicits._
     val qB = spark.sparkContext.broadcast(qArr)
     val search = new ShardSearchRDD(index.resident, None, Some(qB), allShards = true, k,
       efBudget(index.meta, k, ef))
-    val parts = math.max(1, math.min(qArr.length, index.resident.graphs.slots))
-    (ShardSearchRDD.ranked(search, parts).toDF("qid", "rank", "id", "dist"), qB)
+    (HnswShardSearch.frame(spark, new ChunkSearch(search, qArr.length, k, index.resident.graphs.slots)), qB)
   }
 
   // ---- mutation / lifecycle (reference M1/B7) ----

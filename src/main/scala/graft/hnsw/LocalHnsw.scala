@@ -22,9 +22,10 @@ import graft.functions.Distances
   * adjacency in LongMaps keyed by global id, which put 4–6 DEPENDENT cache
   * misses in front of every distance eval (map probe → boxed value or
   * array header → data; `norms` was a LongMap[Double], boxing every norm).
-  * The int8 pre-screen experiment (BENCH_SCALE_BUILDPHASES512.json,
+  * An int8 candidate pre-screen (BENCH_SCALE_BUILDPHASES512.json,
   * int8_screen_experiment_r16) measured the 32-way graph phase to be bound
-  * by exactly those dependent-miss chains, not by streamed bytes. Nodes
+  * by exactly those dependent-miss chains, not by streamed bytes; it ran
+  * 13% slower single-thread and ~40% slower at 32-way and was removed. Nodes
   * are therefore numbered densely in INSERTION order (ascending global id
   * within a shard — buildFromPid feeds ids ascending and [[LocalHnsw.fromRows]]
   * sorts, so dense order ≡ id order and (dist, dense) tie-breaks equal
@@ -45,8 +46,7 @@ final class LocalHnsw(
     val m: Int,
     val maxM0: Int,
     val efConstruction: Int,
-    val metricName: String,
-    val int8Screen: Boolean = false) extends Serializable {
+    val metricName: String) extends Serializable {
 
   // validates the metric name exactly like the reference's constructor
   // check (`hsnw_trial.py:88-89`)
@@ -99,11 +99,10 @@ final class LocalHnsw(
     idArr = java.util.Arrays.copyOf(idArr, cap)
     levelArr = java.util.Arrays.copyOf(levelArr, cap)
     adj = java.util.Arrays.copyOf(adj, cap)
-    if (quantArr != null) quantArr = java.util.Arrays.copyOf(quantArr, cap)
   }
 
   /** Register a node: copy the vector into the flat block, cache its norm
-    * (cosine), quantize (screen), allocate adjacency. Insertion order IS
+    * (cosine), allocate adjacency. Insertion order IS
     * the dense order — callers must feed ascending global ids (asserted)
     * so dense tie-breaks equal id tie-breaks.
     */
@@ -121,7 +120,6 @@ final class LocalHnsw(
     levelArr(d) = level
     adj(d) = Array.fill(level + 1)(new LongList(if (level == 0) maxM0 else m))
     denseOf(id) = d
-    if (screenActive) quantArr(d) = quantize(vector)
     d
   }
 
@@ -182,72 +180,6 @@ final class LocalHnsw(
     }
   }
 
-  // ---- int8 candidate pre-screen (cosine only) -----------------------
-  // Reads the 4×-smaller int8 copy first and skips the float eval when
-  // the quantization-error LOWER BOUND on the true distance already
-  // exceeds the kept-heap's worst — a PROVABLY BIT-IDENTICAL skip, not an
-  // approximation: per component vᵢ = s·qᵢ + eᵢ with |eᵢ| ≤ s/2
-  // (round-to-nearest), so |dot(a,b) − s_a·s_b·dot8| ≤
-  // 0.5·(s_a·‖b₈‖₁ + s_b·‖a₈‖₁) + dim·s_a·s_b/4 (the ‖·‖₁ are of the
-  // DEQUANTIZED vectors, computed exactly at quantization time), and
-  // skip fires only when approxDist − bound/denominator > worst ⟹
-  // trueDist > worst ⟹ the unscreened loop would have pushed nothing
-  // (strict <). The bound is inflated 1e−6 relative against its own
-  // double rounding. Identity is spec-pinned (LocalHnswSpec: same edges,
-  // same search results, screen on vs off). MEASURED NEGATIVE for wall
-  // clock on this VM (13% slower single-thread, ~40% slower at 32-way —
-  // BENCH_SCALE_BUILDPHASES512.json int8_screen_experiment_r16: the
-  // phase is bound by dependent-miss chains, which the screen lengthens,
-  // not by streamed bytes) — kept as an off-by-default lever with the
-  // artifact recording why.
-  private val screenActive = int8Screen && cacheNorms
-  /** codes + scale + exact L1 of the dequantized vector. */
-  private[hnsw] final class Quant(val codes: Array[Byte], val scale: Double, val l1: Double)
-  private var quantArr: Array[Quant] = if (screenActive) new Array[Quant](cap) else null
-  /** Screen observability for the micro-bench: evals seen / float reads saved. */
-  var screenEvals: Long = 0L
-  var screenSkips: Long = 0L
-
-  private def quantize(v: Array[Float]): Quant = {
-    var maxAbs = 0.0f
-    var i = 0
-    while (i < v.length) { val a = math.abs(v(i)); if (a > maxAbs) maxAbs = a; i += 1 }
-    val s = maxAbs / 127.0
-    val codes = new Array[Byte](v.length)
-    var l1i = 0L
-    if (s > 0.0) {
-      i = 0
-      while (i < v.length) {
-        val c = math.round(v(i) / s).toInt
-        codes(i) = c.toByte
-        l1i += math.abs(c)
-        i += 1
-      }
-    }
-    new Quant(codes, s, s * l1i.toDouble)
-  }
-
-  /** True iff the int8 lower bound on dist(q, d) exceeds `worst` — the
-    * certified skip. NaN-safe: a zero-norm operand yields NaN here and
-    * falls through to the exact eval (which defines that case as 1.0).
-    */
-  @inline private def screenedOut(sq: Quant, qNorm: Double, d: Int, worst: Double): Boolean = {
-    val nq = quantArr(d)
-    val a = sq.codes
-    val b = nq.codes
-    var dot = 0
-    var i = 0
-    while (i < dim) { dot += a(i) * b(i); i += 1 }
-    val denom = qNorm * normArr(d)
-    val e = (0.5 * (sq.scale * nq.l1 + nq.scale * sq.l1) +
-      dim * sq.scale * nq.scale * 0.25) * 1.000001
-    screenEvals += 1
-    // lower bound on the distance = 1 − (upper bound on the dot)/denom
-    val out = 1.0 - (sq.scale * nq.scale * dot + e) / denom > worst
-    if (out) screenSkips += 1
-    out
-  }
-
   // ---- traversal (dense) ----------------------------------------------
 
   @inline private def neighborsAt(d: Int, layer: Int): LongList = {
@@ -273,7 +205,6 @@ final class LocalHnsw(
     */
   private def searchLayerDense(q: Array[Float], qn: Double, entry: Int, ef: Int, layer: Int,
                                skip: Long => Boolean): Array[(Double, Long)] = {
-    val sq = if (screenActive) quantize(q) else null
     val visited = new LongHashSet(math.max(64, 4 * ef))
     visited.add(entry.toLong)
     // frontier: nearest-(dist, id) first; kept: worst-(dist, id) at the
@@ -296,20 +227,12 @@ final class LocalHnsw(
         while (i < nbrs.length) {
           val nb = nbrs(i).toInt
           if (visited.add(nb.toLong)) {
-            // certified skip: with the kept heap full, a candidate whose
-            // int8 distance lower bound already exceeds the heap's worst
-            // provably fails the push test below — the float vector is
-            // never read (bit-identical by the bound)
-            if (sq != null && kept.size >= ef && screenedOut(sq, qn, nb, kept.topDist)) {
-              () // nothing to push, exactly as the unscreened loop
-            } else {
-              val nd = dQ(q, qn, nb)
-              if (kept.size < ef || nd < kept.topDist) {
-                frontier.push(nd, nb.toLong)
-                if (!skip(idArr(nb))) {
-                  kept.push(nd, nb.toLong)
-                  if (kept.size > ef) kept.pop()
-                }
+            val nd = dQ(q, qn, nb)
+            if (kept.size < ef || nd < kept.topDist) {
+              frontier.push(nd, nb.toLong)
+              if (!skip(idArr(nb))) {
+                kept.push(nd, nb.toLong)
+                if (kept.size > ef) kept.pop()
               }
             }
           }

@@ -295,11 +295,13 @@ private[hnsw] final class ShardSearchRDD(
 }
 
 private[hnsw] object ShardSearchRDD {
-  /** The global per-query top-k of a shard search as (qid, rank, id,
-    * dist) rows, merged inside the RDD that the query's DataFrame scans
-    * (so its plan has no Exchange and a call is one job): the slot tasks'
-    * buffers are combined per qid in `parts` partitions. Named
-    * [[Hnsw.ShardSearchName]], so plans show `Scan HnswShardSearch`.
+  /** The global per-query top-k of a distributed shard search as (qid,
+    * rank, id, dist) rows, merged inside the RDD that the query's
+    * DataFrame scans (so its plan has no Exchange and a call is one job):
+    * the slot tasks' buffers are combined per qid in `parts` partitions.
+    * Named [[Hnsw.ShardSearchName]], so plans show `Scan HnswShardSearch`.
+    * A broadcast chunk's search is merged on the driver instead
+    * ([[ChunkSearch]]).
     */
   def ranked(search: ShardSearchRDD, parts: Int): RDD[(Long, Int, Long, Double)] = {
     val merge = (a: TopKBuffer, b: TopKBuffer) => { a.mergeFrom(b); a }

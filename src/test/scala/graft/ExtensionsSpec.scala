@@ -283,6 +283,50 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(IndexRegistry.rewriteCount === before3)
   }
 
+  test("shard search leaf: count, limit, a join, spillPath chunks and the SQL rewrite read collect()'s rows") {
+    import graft.hnsw.{Hnsw, HnswParams, HnswShardSearchStrategy}
+    import graft.plans.IndexRegistry
+    import spark.implicits._
+
+    val rng = new scala.util.Random(17)
+    val vecs = (0L until 300L).map(i => (i, Array.fill(8)(rng.nextGaussian().toFloat)))
+    val index = Hnsw.build(vecs.toDF("id", "vector"),
+      HnswParams(dim = 8, m = 4, efConstruction = 32, numPartitions = 3))
+    val qs = vecs.filter(_._1 % 30 == 4)
+    val qDf = qs.toDF("qid", "vector")
+    val ann = Hnsw.annQuery(index, qDf, k = 5)
+    val rows = ann.collect().map(_.toSeq)
+    assert(rows.length === qs.length * 5)
+    assert(ann.count() === rows.length)
+    val some = ann.limit(7).collect().map(_.toSeq)
+    assert(some.length === 7 && some.toSet.subsetOf(rows.toSet))
+    assert(ann.limit(rows.length).collect().map(_.toSeq).toSet === rows.toSet)
+    // consumers other than collect read the leaf as an RDD: their tasks
+    // must serialize without the driver-side search handle
+    val joined = ann.join(index.nodes.select(col("id"), col("level")), "id")
+      .select("qid", "rank", "id", "dist").collect().map(_.toSeq)
+    assert(joined.toSet === rows.toSet && joined.length === rows.length)
+    val spill = java.nio.file.Files.createTempDirectory("ann-leaf-spill").toString
+    val spilled = Hnsw.annQuery(index, qDf, k = 5, queryBatchSize = 3, spillPath = Some(spill))
+      .collect().map(_.toSeq)
+    assert(spilled.toSet === rows.toSet && spilled.length === rows.length)
+
+    index.nodes.createOrReplaceTempView("emb_leaf")
+    IndexRegistry.register("emb_leaf", index)
+    qs.take(3).foreach { case (qid, q) =>
+      val qSql = q.map(x => s"CAST($x AS FLOAT)").mkString("array(", ", ", ")")
+      val got = spark.sql(
+        s"SELECT id, vector_l2(vector, $qSql) AS dist FROM emb_leaf ORDER BY dist LIMIT 5")
+        .collect().map(r => Seq(r.getLong(0), r.getDouble(1))).toSeq
+      val want = rows.filter(_(0) == qid).sortBy(_(1).asInstanceOf[Int]).map(r => Seq(r(2), r(3))).toSeq
+      assert(got === want, s"query $qid")
+    }
+    IndexRegistry.unregister("emb_leaf")
+    // this session's planner got the strategy from the extension, so the
+    // ANN calls' setup added no second copy
+    assert(!spark.experimental.extraStrategies.contains(HnswShardSearchStrategy))
+  }
+
   test("ANN rewrite over a ROUTED index takes the centroid-routed plan, same results as Scala") {
     import graft.hnsw.{Hnsw, HnswParams}
     import graft.plans.IndexRegistry

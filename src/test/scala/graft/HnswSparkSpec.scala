@@ -277,6 +277,22 @@ class HnswSparkSpec extends SparkSpec {
     assert(plan.toString.contains(s"Scan ${Hnsw.ShardSearchName}"), plan.toString)
   }
 
+  test("shard search leaf: a session without the extension plans it on first use, same rows") {
+    import graft.hnsw.HnswShardSearchStrategy
+    val qs = queryArr(50)
+    val other = spark.newSession()
+    val otherIdx = Hnsw.build(other.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id").as("id"), col("embedding").as("vector")), params)
+    assert(!other.experimental.extraStrategies.contains(HnswShardSearchStrategy))
+    val got = Hnsw.annQuery(otherIdx, other.createDataFrame(qs.toSeq).toDF("qid", "vector"), k = 5)
+    Hnsw.annQueryBatch(otherIdx, qs, k = 5)
+    assert(other.experimental.extraStrategies.count(_ == HnswShardSearchStrategy) === 1,
+      "setup must add the strategy once per session")
+    val want = Hnsw.annQuery(index, spark.createDataFrame(qs.toSeq).toDF("qid", "vector"), k = 5)
+    assert(rowSet(got) === rowSet(want))
+    assert(rowSet(want).size === qs.length * 5)
+  }
+
   test("resident shards: a delete after a query never returns the deleted ids; views return only allowed ids") {
     import spark.implicits._
     val qs = queryArr(30)
@@ -314,42 +330,59 @@ class HnswSparkSpec extends SparkSpec {
       assert(slots === math.min(p.numPartitions, SchedulerBridge.localCores(sc).get))
       val loadsBefore = ShardRegistry.loads.get()
       val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+      val stagesRun = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
       val tasks = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
       val stageGroup = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
       val readBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+      val writeBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           val g = Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
           jobs.merge(g, 1, (a, b) => a + b)
           js.stageIds.foreach(s => stageGroup.put(s, g))
         }
+        // skipped stages (the index's shuffle, in place since the first
+        // call) are never submitted
+        override def onStageSubmitted(ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+          stagesRun.merge(stageGroup.getOrDefault(ss.stageInfo.stageId, ""), 1, (a, b) => a + b)
         override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
           val g = stageGroup.getOrDefault(te.stageId, "")
           tasks.merge(g, 1, (a, b) => a + b)
           Option(te.taskMetrics).foreach { m =>
             readBytes.merge(g, m.shuffleReadMetrics.totalBytesRead, (a, b) => a + b)
+            writeBytes.merge(g, m.shuffleWriteMetrics.bytesWritten, (a, b) => a + b)
           }
         }
       }
       sc.addSparkListener(listener)
       try {
         qs.indices.foreach { i =>
-          sc.setJobGroup(s"resident-call-${p.numPartitions}-$i", "resident shard spec")
+          // building the call's frames submits no job; only the action does
+          sc.setJobGroup(s"resident-build-${p.numPartitions}-$i", "resident shard spec")
           val one = spark.createDataFrame(java.util.List.of(
             org.apache.spark.sql.Row(qs(i)._1, qs(i)._2)), schema)
-          val rows = Hnsw.annQuery(idx, one, k = 5).collect()
+          val df = Hnsw.annQuery(idx, one, k = 5)
+          Hnsw.annQueryBatch(idx, Array(qs(i)), k = 5)
+          sc.setJobGroup(s"resident-call-${p.numPartitions}-$i", "resident shard spec")
+          val rows = df.collect()
           sc.clearJobGroup()
           assert(rows.length === 5)
         }
         Thread.sleep(1000) // listener events are asynchronous
       } finally sc.removeSparkListener(listener)
       assert(ShardRegistry.loads.get() - loadsBefore === shards, "fromRows must run once per shard over all calls")
+      qs.indices.foreach { i =>
+        val g = s"resident-build-${p.numPartitions}-$i"
+        assert(jobs.getOrDefault(g, 0) === 0, s"P=${p.numPartitions} building call $i ran ${jobs.get(g)} jobs")
+      }
       (1 until qs.length).foreach { i =>
         val g = s"resident-call-${p.numPartitions}-$i"
         assert(jobs.getOrDefault(g, 0) === 1, s"P=${p.numPartitions} call $i ran ${jobs.get(g)} jobs")
-        assert(tasks.getOrDefault(g, 0) <= slots + 1,
+        assert(stagesRun.getOrDefault(g, 0) === 1, s"P=${p.numPartitions} call $i ran ${stagesRun.get(g)} stages")
+        assert(tasks.getOrDefault(g, 0) === slots,
           s"P=${p.numPartitions} call $i ran ${tasks.get(g)} tasks for $slots slots and one query")
         assert(readBytes.getOrDefault(g, 0L) < 100000L, s"call $i read ${readBytes.get(g)} shuffle bytes")
+        assert(writeBytes.getOrDefault(g, 0L) === 0L, s"call $i wrote ${writeBytes.get(g)} shuffle bytes")
       }
     }
   }

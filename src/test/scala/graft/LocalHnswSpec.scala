@@ -92,37 +92,6 @@ class LocalHnswSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(idx.search(Array(1f, 2f, 3f, 4f), 5, 50).isEmpty)
   }
 
-  test("int8 pre-screen is BIT-IDENTICAL: same edges, same search results, nonzero skip rate") {
-    // the screen's skip condition is a certified bound (skip only when the
-    // int8 lower bound on the distance exceeds the kept-heap's worst), so
-    // the built graph and every search must match the unscreened build
-    // EXACTLY — not just in recall
-    val vecs = randomVectors(2500, 64, seed = 7)
-    val mL = Levels.defaultML(12)
-    def build(screen: Boolean): LocalHnsw = {
-      val idx = new LocalHnsw(64, 12, 24, 100, "cosine", int8Screen = screen)
-      vecs.zipWithIndex.foreach { case (v, i) =>
-        idx.add(i.toLong, v, Levels.levelForLocal(i.toLong, mL))
-      }
-      idx
-    }
-    val plain = build(screen = false)
-    val screened = build(screen = true)
-    assert(screened.screenEvals > 0, "screen must actually engage on a cosine build")
-    assert(screened.screenSkips > 0,
-      s"screen skipped nothing in ${screened.screenEvals} evals — the bound never fires")
-    val edgesP = plain.edges.toSet
-    val edgesS = screened.edges.toSet
-    assert(edgesS === edgesP, "screened build must produce the IDENTICAL edge set")
-    // searches agree bit-for-bit too (the screened instance also screens
-    // its query-time searchLayer calls)
-    vecs.take(20).foreach { q =>
-      assert(screened.search(q, 10, 64).toSeq === plain.search(q, 10, 64).toSeq)
-    }
-    // l2 and screen-off stay untouched by construction
-    assert(new LocalHnsw(64, 12, 24, 100, "l2", int8Screen = true).screenEvals === 0)
-  }
-
   test("cosine metric self-match") {
     val vecs = randomVectors(200, 24, seed = 11)
     val idx = buildIndex(vecs, "cosine")
